@@ -55,8 +55,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2, ordered so a
-    time-budgeted harness walk is most useful: round-1-unverified queries
-    first, cheapest-first (measured at sf0.01) within each tier."""
+    time-budgeted harness walk is most useful: driver-red ids first, then
+    never-sampled, then rewritten-since-green, then the rest oldest
+    evidence first; registration order within a class
+    (registry.ordered_queries)."""
     return registry.ordered_queries()
 
 

@@ -366,19 +366,11 @@ def _duckdb_times() -> dict[str, float]:
     (one pass — DuckDB's in-process runs have none of the JVM/shuffle
     variance the Spark side medians over); SPARK_GRAFT_BENCH_DUCKDB=0
     disables. Queries without oracles are omitted."""
-    import duckdb
-
     from eclypsium_etl_spark.registry import load_all
+    from tests.parity import oracle_con
 
     _, oracles = load_all()
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = oracle_con(SF_DIR)
     times: dict[str, float] = {}
     for name in HEADLINE:
         sql = oracles.get(name)

@@ -55,10 +55,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
 # (path) -> (rows, read units); a parquet layout is immutable once written
 # (fixtures are read-only, memos are write-once), so the footer walk is
 # paid once per process per path.
@@ -335,12 +331,6 @@ def materialize_once(
     write_fn(tmp)
     _commit_dir(tmp, out, lambda: os.path.exists(done))
     return _read()
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql queries."""
-    for name, df in tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:

@@ -5203,29 +5203,8 @@ def q366_rag_index_cdc(spark, sf_dir) -> DataFrame:
     drop+overwrite one atomic commit. The reference's daily full
     re-extract (mercadolibre_pipeline_dag.py:65) is the degenerate
     form: every partition affected, every day."""
-    import os
-    import shutil
-    import tempfile
-
-    from ..io import fixture_suffix
-
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    # managed posting table, seeded with the ORIGINAL corpus
-    suf = fixture_suffix(sf_dir)
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
-    tpost = f"t_q366_post_{suf}"
-    loc = os.path.join(base, f"{tpost}_tbl")
-    shutil.rmtree(loc, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {tpost}")
-    spark.sql(
-        f"CREATE TABLE {tpost} (doc_id BIGINT, chunk_id BIGINT, "
-        f"token STRING, tf BIGINT, shard INT) USING parquet "
-        f"PARTITIONED BY (shard) LOCATION '{loc}'"
-    )
-    _post_of(docs).write.insertInto(tpost)
-    spark.catalog.refreshTable(tpost)
+    tpost = _seed_posting_table(spark, sf_dir, "q366", docs)
 
     # CDC batch: the revised cohort with its new text
     revised = docs.filter(F.col("doc_id") % _REV_MOD == _REV_REM).select(
@@ -5264,6 +5243,34 @@ def q366_rag_index_cdc(spark, sf_dir) -> DataFrame:
     )
 
 
+def _seed_posting_table(spark, sf_dir: str, qid: str, docs: DataFrame) -> str:
+    """(Re)create ``qid``'s managed posting table (q361's landed layout,
+    PARTITIONED BY the token-hash shard) seeded with ``docs``' postings;
+    returns its name. The table-level partitionOverwriteMode makes every
+    overwriting insertInto dynamic without touching the session conf."""
+    import os
+    import shutil
+    import tempfile
+
+    from ..io import fixture_suffix
+
+    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
+    os.makedirs(base, exist_ok=True)
+    tpost = f"t_{qid}_post_{fixture_suffix(sf_dir)}"
+    loc = os.path.join(base, f"{tpost}_tbl")
+    shutil.rmtree(loc, ignore_errors=True)
+    spark.sql(f"DROP TABLE IF EXISTS {tpost}")
+    spark.sql(
+        f"CREATE TABLE {tpost} (doc_id BIGINT, chunk_id BIGINT, "
+        f"token STRING, tf BIGINT, shard INT) USING parquet "
+        f"PARTITIONED BY (shard) OPTIONS (partitionOverwriteMode 'dynamic') "
+        f"LOCATION '{loc}'"
+    )
+    _post_of(docs).write.insertInto(tpost)
+    spark.catalog.refreshTable(tpost)
+    return tpost
+
+
 def _cow_overwrite_shards(
     spark, tpost: str, affected: list, rep_df: DataFrame
 ) -> None:
@@ -5290,15 +5297,11 @@ def _cow_overwrite_shards(
         # nothing to read back or insert; every affected shard empties
         if any(f.endswith(".parquet") for f in os.listdir(staging)):
             rep = spark.read.parquet(staging)
-            mode_key = "spark.sql.sources.partitionOverwriteMode"
-            old_mode = spark.conf.get(mode_key, "static")
-            spark.conf.set(mode_key, "dynamic")
-            try:
-                rep.select(
-                    "doc_id", "chunk_id", "token", "tf", "shard"
-                ).write.mode("overwrite").insertInto(tpost)
-            finally:
-                spark.conf.set(mode_key, old_mode)
+            # dynamic overwrite comes from the table's OPTIONS
+            # (_seed_posting_table): insertInto ignores writer options
+            rep.select(
+                "doc_id", "chunk_id", "token", "tf", "shard"
+            ).write.mode("overwrite").insertInto(tpost)
             present = {
                 r["shard"] for r in rep.select("shard").distinct().collect()
             }
@@ -5490,28 +5493,8 @@ def q368_rag_index_purge(spark, sf_dir) -> DataFrame:
     and, for parquet-level hard deletion, compaction of the rewritten
     files IS the erasure (q235's pass). The anti-join keys on the
     takedown manifest, which is broadcast-sized by construction."""
-    import os
-    import shutil
-    import tempfile
-
-    from ..io import fixture_suffix
-
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    suf = fixture_suffix(sf_dir)
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
-    tpost = f"t_q368_post_{suf}"
-    loc = os.path.join(base, f"{tpost}_tbl")
-    shutil.rmtree(loc, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {tpost}")
-    spark.sql(
-        f"CREATE TABLE {tpost} (doc_id BIGINT, chunk_id BIGINT, "
-        f"token STRING, tf BIGINT, shard INT) USING parquet "
-        f"PARTITIONED BY (shard) LOCATION '{loc}'"
-    )
-    _post_of(docs).write.insertInto(tpost)
-    spark.catalog.refreshTable(tpost)
+    tpost = _seed_posting_table(spark, sf_dir, "q368", docs)
 
     purged = docs.filter(
         F.col("doc_id") % _PURGE_MOD == _PURGE_REM

@@ -287,16 +287,15 @@ def q155_sink_dynamic_partition(spark, sf_dir) -> DataFrame:
     q154, q122)."""
     out = _tmpdir(f"q155_dpo_{os.path.basename(sf_dir)}")
     d = table(spark, sf_dir, "documents")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        d.write.mode("overwrite").partitionBy("source").parquet(out)
-        upd = d.filter(F.col("source").isin("src0", "src1")).withColumn(
-            "n_chars", -F.col("n_chars")
-        )
-        upd.write.mode("overwrite").partitionBy("source").parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    d.write.mode("overwrite").partitionBy("source").parquet(out)
+    upd = d.filter(F.col("source").isin("src0", "src1")).withColumn(
+        "n_chars", -F.col("n_chars")
+    )
+    # per-writer option: the session conf (which a concurrent query
+    # could observe) is never touched
+    upd.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("source").parquet(out)
     # explicit read schema: an empty source slice writes no files/partition
     # dirs and an inferring read fails (empty-input walk) — production
     # readers of partitioned sinks always know their schema

@@ -35,13 +35,6 @@ def read_schema_columns(df: DataFrame) -> list[str]:
     return sorted(set(cols))
 
 
-def pushed_filters(df: DataFrame) -> str:
-    """The PushedFilters section of the scan (predicate pushdown evidence)."""
-    plan = physical_plan(df)
-    m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
-    return m.group(1) if m else ""
-
-
 def shuffle_count(df: DataFrame) -> int:
     """Number of shuffle exchanges in the physical plan — the metric that
     matters most at 100 TB. Counts EVERY shuffle flavor (hash, range,

@@ -90,152 +90,13 @@ def load_all() -> tuple[dict[str, QueryFn], dict[str, str]]:
     return QUERIES, ORACLE
 
 
-# The driver's correctness harness walks queries() in dict order under a
-# time budget (~50 ids/round observed). Round-5 order (VERDICT r4
-# "Next round" #3): pure evidence conversion — tier 0 is every id with
-# no driver CORRECTNESS row through r4, tier 1 the already-green rest.
-# The whole tier 0 walks in ~99 s at sf0.01 under the driver config
-# (profiled this round), so any time budget that reached 50 ids before
-# reaches at least as many here.
-_CHEAP_FIRST = [
-    # --- round-8 additions (§2.14, freeze lifted per VERDICT r7): never
-    # driver-sampled, so ordered_queries() walks them first regardless —
-    # listed here so the profile order stays explicit. ---
-    "q317_scd2_merge_table", "q318_posting_segments", "q319_ivf_trained",
-    "q320_stream_join_asym_watermark", "q321_stream_dedup_business_key",
-    "q322_struct_rollup", "q323_ivf_multiprobe", "q324_scd2_multiwave",
-    "q325_ivf_probe_ladder", "q326_scd2_tombstone",
-    "q327_ivf_sample_trained",
-    # --- tier 0: the 119 ids with NO driver CORRECTNESS row through
-    # r4 (VERDICT r4 "Next round" #3: spend the whole r5 budget here).
-    # Front: q275 (the one RED r4 row — array transport, fixed, re-
-    # sample first) then the round-4 additions q302-q316 +
-    # q276/q268/q274/q281 (ADVICE r4: zero driver evidence, highest
-    # transport risk). The r1-r3 leftovers follow cheapest-first from a
-    # FRESH sf0.01 walk profile (this round, driver-config session) so
-    # a time-boxed budget greens the maximum number of ids. ---
-    "q275_array_fns_modern", "q302_image_resize", "q303_goertzel_tones",
-    "q304_entity_resolution", "q305_cdc_apply", "q306_stream_full_outer_join",
-    "q307_time_weighted_avg", "q308_seasonal_residual",
-    "q309_quota_apportion", "q310_sprt", "q311_event_pmi",
-    "q312_surrogate_keys", "q313_embedding_standardize",
-    "q314_char_ngram_jaccard", "q315_mad_robust_z", "q316_benford_audit",
-    "q276_sparse_cosine_pairs", "q268_bpe_merges", "q274_stream_outer_join",
-    "q281_stream_chained_windows",
-    "q169_map_in_arrow", "q209_nested_output", "q223_udf_iterator",
-    "q166_length_buckets", "q172_pattern_detect", "q121_embed_quantize",
-    "q164_source_text", "q146_string_agg", "q237_collated_group",
-    "q185_histogram_equidepth", "q230_sql_variables", "q216_observe_metrics",
-    "q189_win_first_last_nth", "q153_rollup_multigrain", "q161_bucketed_join",
-    "q218_sql_pipe", "q222_hll_sketch_union", "q176_values_join",
-    "q194_pack_boundaries", "q141_bigram_vocab", "q165_mlm_mask",
-    "q180_curriculum_order", "q233_udf_arrow_optimized", "q188_pct_change",
-    "q181_split_leakage", "q203_quantile_sketch", "q196_outlier_iqr",
-    "q134_dedup_keep_best", "q217_scan_file_metadata", "q168_variant_json",
-    "q195_zorder_layout", "q213_user_profile", "q224_udtf_table_arg",
-    "q234_csv_permissive", "q154_nucleus_topp", "q193_shard_rebalance",
-    "q204_rolling_multi_horizon", "q167_source_xml", "q225_sql_pivot_unpivot",
-    "q144_join_lateral", "q131_mixture_temperature", "q152_asof_tolerance",
-    "q159_inverted_index", "q207_percent_of_total", "q183_ab_lift",
-    "q184_token_entropy", "q179_hard_negatives", "q206_time_to_convert",
-    "q151_interval_bin_join", "q211_try_expressions",
-    "q197_first_touch_attribution", "q133_perplexity_unigram",
-    "q147_anomaly_zscore", "q150_zipf_fit", "q174_setops_all",
-    "q198_decile_lift", "q173_sql_udf", "q126_sessionize",
-    "q215_apply_in_arrow", "q192_pit_join", "q186_source_overlap",
-    "q182_drift_psi", "q232_cached_scan", "q200_corpus_build",
-    "q214_substring_spans", "q120_dedup_blocks", "q160_funnel",
-    "q227_distribute_sort_by", "q163_stream_update_counts",
-    "q157_profile_columns", "q130_sim_quantized_topk",
-    "q187_stream_complete_topk", "q190_sink_jsonl", "q178_embedding_pool",
-    "q202_minhash_merge", "q143_regression_agg", "q128_heavy_hitters_cms",
-    "q140_ngram_decontaminate", "q139_scd2_history", "q171_retention_cohorts",
-    "q123_quality_repetition", "q148_schema_evolution", "q243_state_reader",
-    "q149_boilerplate_grams", "q155_sink_dynamic_partition",
-    "q124_bloom_decontaminate", "q221_python_datasource",
-    "q170_recursive_hierarchy", "q259_stream_append_final",
-    "q235_compact_small_files", "q129_semdedup", "q137_stream_curation",
-    "q201_url_canonical_dedup", "q142_knn_graph", "q156_textrank",
-    "q162_pca_power", "q127_running_total", "q239_triangle_count",
-    "q229_python_stream_source",
-    # --- tier 1: driver-green in r1-r4 (197), cheapest-first; the
-    # budget only reaches these after every tier-0 id has a row ---
-    "q251_gzip_jsonl_source", "q252_binary_file_source",
-    "q253_tar_packed_assets", "q254_multiline_json", "q255_csv_quoting",
-    "q256_from_csv_expr", "q257_xpath_functions", "q258_hash_functions",
-    "q208_gap_audit", "q191_corpus_fingerprint", "q205_collapse_adjacent",
-    "q145_histogram", "q264_group_order_by_all", "q265_stack_inline",
-    "q266_str_to_map", "q269_map_hofs", "q273_mask_functions",
-    "q271_band_join_bnl", "q261_unicode_nfc", "q260_png_roundtrip",
-    "q262_char_coverage", "q267_vocab_oov", "q278_soft_dedup_weights",
-    "q277_token_stream_chunks", "q270_fixed_width_source",
-    "q272_json_permissive", "q263_perplexity_bigram", "q279_ccnet_buckets",
-    "q280_union_schema_evolution", "q285_gopher_rules", "q282_dsir_weights",
-    "q283_bpe_apply", "q284_corpus_manifest", "q286_time_decay_agg",
-    "q287_dedup_eval", "q288_script_detect", "q289_minhash_estimate",
-    "q290_gopher_repetition", "q291_zip_packed_assets", "q292_banding_curve",
-    "q293_stream_session_final", "q294_haversine_join", "q295_gdpr_purge",
-    "q296_constraint_audit", "q297_rolling_distinct", "q298_pareto_frontier",
-    "q299_clamped_balance", "q300_warehouse_build",
-    "q301_partition_reprocess", "q59_udf_scalar", "q81_subquery",
-    "q106_partial_reagg", "q86_partition_pruning", "q67_text_tfidf",
-    "q72_sim_ivf", "q92_cogroup", "q78_dedup_embedding", "q63_dedup_near",
-    "q115_decontaminate", "q71_dedup_minhash_lsh", "q111_dedup_groups",
-    "q118_stream_static_join", "q56_stream_watermark",
-    "q57_stream_dedup_state", "q87_stream_stateful",
-    "q101_stream_stream_join", "q23_agg_approx_distinct",
-    "q52_shortcircuit_gate", "q113_stream_transform_state",
-    "q135_text_normalize", "q199_calendar_dim", "q136_embedding_validate",
-    "q132_split_assign", "q175_limit_offset", "q138_doc_chunking",
-    "q125_sample_weighted", "q238_approx_top_k", "q122_domain_rebalance",
-    "q228_script_transform", "q177_null_ordering", "q236_lateral_alias",
-    "q119_pii_redact", "q158_weighted_reservoir", "q210_struct_array_explode",
-    "q219_sql_named_params", "q212_dayparting", "q231_execute_immediate",
-    "q220_transpose", "q226_lateral_view", "q240_bitmap_distinct",
-    "q241_timezone_convert", "q242_calendar_arithmetic", "q244_ddl_defaults",
-    "q245_analyze_stats", "q246_sql_scripting", "q247_join_hints",
-    "q248_wav_roundtrip", "q249_ppm_roundtrip", "q250_y4m_framesample",
-    "q96_unpivot", "q61_udtf", "q109_pad_trim", "q99_bitwise",
-    "q98_string_distance", "q75_text_token_count", "q76_text_fingerprint",
-    "q97_array_setops", "q74_text_quality", "q50_case_when",
-    "q107_null_safe_eq", "q114_stratified_sample", "q116_curation_pipeline",
-    "q117_sequence_pack", "q102_dedup_hash", "q49_map_fns", "q62_dedup_exact",
-    "q95_explode_outer", "q108_conditional_agg", "q68_text_lang_stats",
-    "q48_array_fns", "q85_window_dedup", "q73_text_langid",
-    "q104_merge_upsert", "q100_argmax", "q83_exists_in", "q79_pivot",
-    "q91_mode", "q77_multimodal_decode", "q112_multimodal_framesample",
-    "q80_percentiles", "q82_cte", "q54_stream_sliding", "q69_multimodal_cols",
-    "q53_stream_tumbling", "q110_greatest_least", "q88_python_udtf",
-    "q51_cast_coalesce", "q105_snapshot_diff", "q66_text_tokenize",
-    "q70_dedup_simhash", "q64_sim_knn", "q55_stream_session",
-    "q84_skew_salted_join", "q60_udaf_grouped", "q103_kmeans_assign",
-    "q89_gapfill", "q90_stats_agg", "q65_sim_pairs",
-    "q58_stream_foreachbatch", "q36_limit", "q38_union_all",
-    "q47_json_serialize", "q37_topk_per_group", "q27_agg_having",
-    "q41_except", "q43_date_parts", "q34_win_ntile_pct", "q35_orderby",
-    "q25_agg_cube", "q30_win_rank", "q39_union_distinct",
-    "q19_join_selfdedup", "q26_agg_groupingsets", "q10_constant_col",
-    "q33_win_range_frame", "q40_intersect", "q24_agg_rollup",
-    "q29_win_rownumber", "q46_json_get", "q22_agg_distinct",
-    "q31_win_lag_lead", "q20_agg_global", "q42_date_format",
-    "q28_agg_collect", "q14_join_semi", "q32_win_running", "q08_filter_arith",
-    "q15_join_anti", "q93_source_csv", "q44_math_expr", "q09_filter_compound",
-    "q21_agg_groupby", "q18_join_asof", "q17_join_theta_range",
-    "q11_join_inner_hash", "q94_source_orc", "q06_sink_report",
-    "q05_sink_jdbc", "q13_join_left_outer", "q45_string_fns",
-    "q12_join_broadcast", "q07_project", "q16_join_multiway",
-    "q04_sink_overwrite", "q02_source_json", "q03_source_fanout_union",
-    "q01_scan_parquet",
-]
-
-
 def _driver_rows(root: str | None = None) -> dict[str, tuple[int, bool]]:
     """id -> (latest sampled round, latest outcome). Outcome True = clean
     row: full rows+schema+hash match, or the declared rows-only contract
     for no-oracle queries. Reads the driver-written CORRECTNESS_r*.json
     in the repo root; an id absent from every file has never been
     sampled. Best-effort: unreadable files are skipped, so a missing or
-    malformed evidence set degrades to the static order."""
+    malformed evidence set degrades to registration order."""
     import glob
     import json
     import os
@@ -319,23 +180,19 @@ def ordered_queries() -> dict[str, QueryFn]:
     orders OLDEST driver evidence first (VERDICT r11 #7: rows that
     predate several rounds are the weakest link in the evidence chain —
     the walk's leftover budget now refreshes them before re-proving
-    last round's rows), with the _CHEAP_FIRST profile order breaking
-    ties within an evidence round (cheapest-first, so the budget greens
-    the maximum count); names missing from the profile append in
-    registration order. The classes come from the driver's own
-    CORRECTNESS_r*.json at load time, so the walk self-adapts every
-    round without a manual re-tier."""
+    last round's rows). Registration order breaks every remaining tie.
+    The classes come from the driver's own CORRECTNESS_r*.json at load
+    time, so the walk self-adapts every round without a manual
+    re-tier."""
     q, _ = load_all()
-    base = [n for n in _CHEAP_FIRST if n in q]
-    base += [n for n in q if n not in set(base)]
     rows = _driver_rows()
     stale_round = _staleness()
-    red = [n for n in base if n in rows and not rows[n][1]]
-    never = [n for n in base if n not in rows]
-    green = [n for n in base if n in rows and rows[n][1]]
-    pos = {n: i for i, n in enumerate(base)}
+    red = [n for n in q if n in rows and not rows[n][1]]
+    never = [n for n in q if n not in rows]
+    green = [n for n in q if n in rows and rows[n][1]]
+    # list.sort is stable: equal keys keep registration order
     stale = [n for n in green if stale_round.get(n, 0) > rows[n][0]]
-    stale.sort(key=lambda n: (-stale_round[n], rows[n][0], pos[n]))
+    stale.sort(key=lambda n: (-stale_round[n], rows[n][0]))
     fresh = [n for n in green if n not in set(stale)]
-    fresh.sort(key=lambda n: (rows[n][0], pos[n]))
+    fresh.sort(key=lambda n: rows[n][0])
     return {n: q[n] for n in red + never + stale + fresh}

@@ -1190,7 +1190,8 @@ def retractable_mv_create(spark, tname: str, loc: str) -> None:
         CREATE TABLE {tname} (
             o_custkey BIGINT, n_orders BIGINT, total_dec DECIMAL(28,4),
             nn BIGINT, last_seq INT, pt INT
-        ) USING parquet PARTITIONED BY (pt) LOCATION '{loc}'
+        ) USING parquet PARTITIONED BY (pt)
+        OPTIONS (partitionOverwriteMode 'dynamic') LOCATION '{loc}'
         """
     )
 
@@ -1304,16 +1305,11 @@ def retractable_mv_handler(spark, tname: str):
             .filter(F.col("n_orders") > 0)  # dead groups drop at merge
             .withColumn("pt", _mv_pt(F.col("o_custkey")))
         )
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.select(
-                "o_custkey", "n_orders", "total_dec", "nn", "last_seq", "pt"
-            ).write.insertInto(tname, overwrite=True)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # dynamic overwrite comes from the table's OPTIONS
+        # (retractable_mv_create): insertInto ignores writer options
+        merged.select(
+            "o_custkey", "n_orders", "total_dec", "nn", "last_seq", "pt"
+        ).write.insertInto(tname, overwrite=True)
         spark.catalog.refreshTable(tname)
 
     return merge

@@ -7,7 +7,8 @@ codebooks, partitioned layouts), pass 2 is WARM (the steady-state
 shape) — and writes BENCH_SWEEP_r{N}_{cold,warm}.json as {query:
 seconds} sorted slowest-first. Warm-vs-warm across rounds is the
 standing regression rule (VERDICT r9 #6); the cold pass explains the
-tail (memoized one-time ETL).
+tail (memoized one-time ETL). The session is the grading driver's
+(tests/parity.driver_session) on $SPARK_GRAFT_CPUS cores (default: all).
 
     python scripts/bench_sweep.py 10      # writes BENCH_SWEEP_r10_*.json
 """
@@ -21,9 +22,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 from eclypsium_etl_spark import registry  # noqa: E402
+from eclypsium_etl_spark.session import cpu_count  # noqa: E402
+from tests.parity import driver_session  # noqa: E402
 
 
 def main() -> None:
@@ -31,15 +32,7 @@ def main() -> None:
     warm_only = "--warm-only" in sys.argv  # refresh pass at a tree whose
     # memos already exist (the r9 "refresh the warm sweep" pattern)
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = driver_session(cores=cpu_count())
     queries = registry.ordered_queries()
     for label in (("warm",) if warm_only else ("cold", "warm")):
         times: dict[str, float] = {}

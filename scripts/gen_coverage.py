@@ -12,9 +12,7 @@ has sampled it yet.
 
 from __future__ import annotations
 
-import glob
 import inspect
-import json
 import os
 import re
 import sys
@@ -40,56 +38,26 @@ Declared boundary waivers (judge-visible, SURVEY §1.4 / VERDICT r4):
 """
 
 
-def driver_evidence() -> dict[str, str]:
-    """query id -> 'rN green' / 'rN RED' (latest round wins) or absent.
-
-    Paths sort by PARSED round number, not filename: lexicographic order
-    would put an unpadded CORRECTNESS_r10.json before r2..r9 and stale
-    outcomes would win (ADVICE r5)."""
-    out: dict[str, str] = {}
-
-    def _round_of(path: str) -> int:
-        m = re.search(r"r(\d+)", os.path.basename(path))
-        return int(m.group(1)) if m else 0
-
-    for path in sorted(glob.glob("CORRECTNESS_r*.json"), key=_round_of):
-        rnd = _round_of(path)
-        with open(path) as f:
-            data = json.load(f)
-        for name, row in data.items():
-            if row.get("err") == "no_oracle":
-                # declared rows-only query: the driver records the run
-                # and row count but no differential — that's the
-                # contract, not a failure
-                ran = row.get("spark_rows") is not None
-                out[name] = f"r{rnd} {'rows-only' if ran else 'RED'}"
-                continue
-            ok = (
-                not row.get("err")
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            )
-            out[name] = f"r{rnd} {'green' if ok else 'RED'}"
-    return out
-
-
 def main() -> None:
     import __spark_entry__ as entry
+    from eclypsium_etl_spark.registry import _driver_rows
 
     queries = entry.queries()
     oracles = entry.oracle_sql()
-    evidence = driver_evidence()
+    # query id -> 'rN green' / 'rN RED' (latest round wins), 'rN
+    # rows-only' for a clean run of a query without an oracle (the
+    # declared contract, not a failure), or absent if never sampled
+    rows = _driver_rows()
+    evidence = {
+        name: f"r{rnd} "
+        + ("RED" if not ok else "green" if name in oracles else "rows-only")
+        for name, (rnd, ok) in rows.items()
+    }
     n_driver = sum(1 for q in queries if q in evidence)
     # As-of stamp (VERDICT r6 "what's wrong" #2): the generator runs
     # before the NEXT driver walk, so the header names the round its
     # evidence union actually reflects — one-walk lag is self-describing.
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob("CORRECTNESS_r*.json")
-        if (m := re.search(r"r(\d+)", os.path.basename(p)))
-    ]
-    as_of = f"r{max(rounds)}" if rounds else "none"
+    as_of = f"r{max(r for r, _ in rows.values())}" if rows else "none"
     lines = [
         "# COVERAGE — query id → implementation → oracle → driver evidence",
         "",

@@ -28,7 +28,6 @@ import os
 import statistics
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -95,6 +94,7 @@ def ensure_fixture() -> str:
 def run_one_core_count() -> None:
     from eclypsium_etl_spark.registry import load_all
     from eclypsium_etl_spark.session import cpu_count, get_spark
+    from time_one import time_noop
 
     sf_dir = ensure_fixture()
     spark = get_spark(app_name="scale-pin")
@@ -102,13 +102,7 @@ def run_one_core_count() -> None:
     queries, _ = load_all()
     section: dict[str, dict] = {}
     for name in QUERIES:
-        fn = queries[name]
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-        ts = []
-        for _ in range(N):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            ts.append(time.perf_counter() - t0)
+        ts = time_noop(queries[name], spark, sf_dir, N)
         section[name] = {
             "median": round(statistics.median(ts), 3),
             "samples": [round(t, 3) for t in ts],

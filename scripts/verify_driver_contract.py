@@ -1,82 +1,71 @@
 #!/usr/bin/env python
 """Emulate the grading driver end-to-end: run entry(), then every
-queries() entry against its oracle_sql() on DuckDB at sf0.01, in harness
-order, from whatever SparkSession config this process gets.
+queries() entry against its oracle_sql() on DuckDB at sf0.01 (or
+$SPARK_GRAFT_SF_DIR), in harness order, from the driver's own
+SparkSession config (tests/parity.driver_session).
 
 Usage:
-    python scripts/verify_driver_contract.py            # engine defaults
+    python scripts/verify_driver_contract.py            # driver config
     SPARK_GRAFT_PLAIN=1 python scripts/verify_driver_contract.py
         # fully DEFAULT SparkSession (shuffle=200, host timezone) — the
         # harshest approximation of an unknown driver config; the walk
         # must stay green there too (proven 2026-08-13, round 3).
+    python scripts/verify_driver_contract.py q21_agg_groupby q63_dedup_near
+        # only the named queries (no entry() smoke) — the fast
+        # iteration loop for a touched query
+    python scripts/verify_driver_contract.py --json OUT.json q63_dedup_near
+        # also write the machine-readable artifact
+        # {"_sf_dir": {ok, detail}, name: {ok, detail, sec}}
 
 Exit code 0 iff every query matches (or runs, for no-oracle entries).
 """
 
 from __future__ import annotations
 
+import argparse
+import json
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tests"))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
-    import duckdb
-    from pyspark.sql import SparkSession
-
-    if os.environ.get("SPARK_GRAFT_PLAIN"):
-        spark = (
-            SparkSession.builder.master("local[*]")
-            .config("spark.ui.enabled", "false")
-            .config("spark.ui.showConsoleProgress", "false")
-            .getOrCreate()
-        )
-    else:
-        spark = (
-            SparkSession.builder.master("local[8]")
-            .config("spark.sql.shuffle.partitions", "8")
-            .config("spark.ui.enabled", "false")
-            .config("spark.ui.showConsoleProgress", "false")
-            .config("spark.sql.session.timeZone", "UTC")
-            .getOrCreate()
-        )
-    spark.sparkContext.setLogLevel("ERROR")
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument("names", nargs="*", help="query ids (default: all)")
+    ap.add_argument("--json", metavar="OUT", help="write {name: {ok, detail, sec}}")
+    args = ap.parse_args()
 
     import __spark_entry__ as entry_mod
-    from parity import compare
-
-    df = entry_mod.entry(spark)
-    print("entry rows:", df.count(), flush=True)
-
-    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
-        )
+    from tests.parity import driver_session, walk
 
     queries, oracles = entry_mod.queries(), entry_mod.oracle_sql()
-    bad = []
+    unknown = [n for n in args.names if n not in queries]
+    if unknown:
+        ap.error(f"unknown query ids: {' '.join(unknown)}")
+
+    spark = driver_session(plain=bool(os.environ.get("SPARK_GRAFT_PLAIN")))
+    if not args.names:
+        df = entry_mod.entry(spark)
+        print("entry rows:", df.count(), flush=True)
+
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     t0 = time.time()
-    for name in queries:
-        if name in oracles:
-            ok, detail = compare(queries[name](spark, sf), con, oracles[name])
-            if not ok:
-                bad.append((name, detail[:200]))
-                print(f"FAIL {name}: {detail[:200]}", flush=True)
-        else:
-            queries[name](spark, sf).count()
+    results = walk(spark, sf, queries, oracles, args.names or None)
     print(f"walk seconds: {time.time() - t0:.1f}")
+    if args.json:
+        with open(args.json, "w") as fh:
+            json.dump(results, fh, indent=1)
+        print(f"wrote {args.json}")
+    n = len(results) - 1
+    bad = sum(not r["ok"] for r in results.values())
     if bad:
-        print(f"FAILED: {len(bad)} of {len(queries)}")
+        print(f"FAILED: {bad} of {n}")
         return 1
-    print(f"ALL OK ({len(queries)} queries)")
+    print(f"ALL OK ({n} queries)")
     return 0
 
 

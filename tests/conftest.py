@@ -4,21 +4,17 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
 from eclypsium_etl_spark.session import get_spark
+
+from .parity import oracle_con
 
 SF_SMOKE = "/root/testdata/sf0.001"
 # Overridable so the env-gated batteries (determinism sweep, parity) can
 # be pointed at another fixture scale — discovered in round 6 when a
 # "sf0.1 determinism run" silently re-ran at the hard-coded sf0.01.
 SF_CHECK = os.environ.get("SPARK_GRAFT_SF_CHECK", "/root/testdata/sf0.01")
-
-FIXTURE_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 @pytest.fixture(scope="session")
@@ -27,23 +23,11 @@ def spark():
     yield spark
 
 
-def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    """Replicates the driver's oracle setup: each fixture table registered
-    as a DuckDB view over the same parquet files Spark reads."""
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
-
-
 @pytest.fixture(scope="session")
 def duck_smoke():
-    return make_duck(SF_SMOKE)
+    return oracle_con(SF_SMOKE)
 
 
 @pytest.fixture(scope="session")
 def duck_check():
-    return make_duck(SF_CHECK)
+    return oracle_con(SF_CHECK)

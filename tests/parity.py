@@ -1,18 +1,26 @@
 """Differential-test harness: Spark result vs DuckDB oracle.
 
-Emulates the driver's correctness gate (row count + column names +
-order-insensitive value comparison) so every registered query is verified
-locally before the driver ever sees it.
+Emulates the grading driver: its SparkSession (``driver_session``), its
+oracle setup (``oracle_con``: one DuckDB view per fixture table), its
+correctness gate (``compare``: row count + column names +
+order-insensitive value comparison) and its walk over the registry
+(``walk``), so every registered query is verified locally before the
+driver ever sees it. The scripts, the tests and the benchmark all import
+this one module.
 """
 
 from __future__ import annotations
 
 import math
+import time
 from datetime import date, datetime
 from decimal import Decimal
 
+import duckdb
 import numpy as np
 import pandas as pd
+
+from eclypsium_etl_spark.schemas import TABLES
 
 
 def _norm_cell(v):
@@ -78,3 +86,62 @@ def compare(spark_df, duck_con, sql: str) -> tuple[bool, str]:
         ][:3]
         return False, f"values differ; first mismatches (spark vs duckdb): {mism}"
     return True, f"ok ({len(spdf)} rows)"
+
+
+def driver_session(cores: int = 8, plain: bool = False):
+    """The grading driver's own SparkSession, not ``session.get_spark``:
+    local[cores] with shuffle partitions = cores and a UTC session
+    timezone. ``plain`` keeps only the UI switches — a fully DEFAULT
+    session (local[*], shuffle=200, host timezone), the harshest
+    approximation of an unknown driver config."""
+    from pyspark.sql import SparkSession
+
+    builder = (
+        SparkSession.builder.master("local[*]" if plain else f"local[{cores}]")
+        .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
+    )
+    if not plain:
+        builder = builder.config(
+            "spark.sql.shuffle.partitions", str(cores)
+        ).config("spark.sql.session.timeZone", "UTC")
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def oracle_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """The driver's oracle setup: each fixture table registered as a
+    DuckDB view over the same parquet files Spark reads."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE OR REPLACE VIEW {t} AS "
+            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def walk(spark, sf_dir: str, queries, oracles, names=None) -> dict[str, dict]:
+    """Run ``names`` (default: all of ``queries``, in its order) at
+    ``sf_dir``: each oracled query through ``compare``, each no-oracle
+    query to a count (it must run). Prints one line per query and returns
+    ``{"_sf_dir": {ok, detail}, name: {ok, detail, sec}}``; an exception
+    is recorded as a failed row, not raised."""
+    results: dict[str, dict] = {"_sf_dir": {"ok": True, "detail": sf_dir}}
+    with oracle_con(sf_dir) as con:
+        for name in queries if names is None else names:
+            t0 = time.perf_counter()
+            try:
+                df = queries[name](spark, sf_dir)
+                if name in oracles:
+                    ok, detail = compare(df, con, oracles[name])
+                else:
+                    ok, detail = True, f"no-oracle ({df.count()} rows)"
+            except Exception as exc:  # noqa: BLE001 - recorded, not raised
+                ok, detail = False, f"{type(exc).__name__}: {exc}"
+            sec = round(time.perf_counter() - t0, 1)
+            results[name] = {"ok": ok, "detail": detail[:500], "sec": sec}
+            print(f"{'OK  ' if ok else 'FAIL'} {name} ({sec}s)"
+                  + ("" if ok else f" {detail[:300]}"), flush=True)
+    return results

@@ -28,14 +28,14 @@ import os
 import shutil
 import tempfile
 
-import duckdb
 import pytest
 
 from eclypsium_etl_spark import registry
 from eclypsium_etl_spark.io import source_stamp
+from eclypsium_etl_spark.schemas import TABLES
 
-from .conftest import FIXTURE_TABLES, SF_CHECK
-from .parity import compare
+from .conftest import SF_CHECK
+from .parity import compare, oracle_con
 
 pytestmark = pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_CLUSTERED_SWEEP"),
@@ -99,7 +99,7 @@ def _clustered_fixture_dir() -> str:
         t.schema.get_field_index("embedding"), "embedding", arr
     )
     pq.write_table(out_t, os.path.join(tmp, "embeddings.parquet"))
-    for name in FIXTURE_TABLES:
+    for name in TABLES:
         if name == "embeddings":
             continue
         shutil.copyfile(
@@ -121,13 +121,7 @@ def clu_fx() -> str:
 
 @pytest.fixture(scope="session")
 def duck_clu(clu_fx):
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{clu_fx}/{t}.parquet')"
-        )
-    return con
+    return oracle_con(clu_fx)
 
 
 def test_clusters_actually_planted(duck_clu):

@@ -49,9 +49,10 @@ import duckdb
 import pytest
 
 from eclypsium_etl_spark import registry
+from eclypsium_etl_spark.schemas import TABLES
 
-from .conftest import FIXTURE_TABLES, SF_CHECK
-from .parity import compare
+from .conftest import SF_CHECK
+from .parity import compare, oracle_con
 
 pytestmark = pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_EMPTY_SWEEP"),
@@ -88,7 +89,7 @@ def _empty_fixture_dir() -> str:
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     con = duckdb.connect()
-    for t in FIXTURE_TABLES:
+    for t in TABLES:
         con.execute(
             f"COPY (SELECT * FROM read_parquet('{SF_CHECK}/{t}.parquet') "
             f"WHERE false) TO '{tmp}/{t}.parquet' (FORMAT PARQUET)"
@@ -108,13 +109,7 @@ def empty_fx() -> str:
 
 @pytest.fixture(scope="session")
 def duck_empty(empty_fx):
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{empty_fx}/{t}.parquet')"
-        )
-    return con
+    return oracle_con(empty_fx)
 
 
 @pytest.mark.parametrize("name", GREEN)

@@ -3,7 +3,8 @@ the fast path must defer to an in-flight replace lock, and the lock
 holder must keep — not delete or crash on — a complete build that a
 fast-path racer installed inside the rename-aside → install window.
 
-Pure-python: no SparkSession needed."""
+Pure-python: no SparkSession needed, except for the last test (dynamic
+partition overwrite of a catalog table), which uses the session one."""
 
 from __future__ import annotations
 
@@ -92,3 +93,36 @@ def test_install_rename_race_keeps_racers_complete_build(tmp_path):
     assert os.path.exists(os.path.join(out, "_SUCCESS"))
     assert not os.path.exists(tmp)  # no leak
     assert not os.path.exists(out + ".replace-lock")
+
+
+def test_table_option_overwrites_dynamically_without_session_conf(spark, tmp_path):
+    """q351's MV (and the q366/q368 posting tables) get dynamic partition
+    overwrite from the table's OPTIONS, not from the session conf a
+    concurrent query could observe: an overwriting insertInto must
+    rewrite only the partitions it carries and leave the session at
+    STATIC."""
+    from eclypsium_etl_spark.streaming.queries import retractable_mv_create
+
+    tname = "t_dpo_option_pin"
+    cols = ["o_custkey", "n_orders", "total_dec", "nn", "last_seq", "pt"]
+
+    def rows(pts, n):
+        return spark.createDataFrame(
+            [(p, n, None, 0, 0, p) for p in pts],
+            "o_custkey BIGINT, n_orders BIGINT, total_dec DECIMAL(28,4), "
+            "nn BIGINT, last_seq INT, pt INT",
+        ).select(*cols)
+
+    retractable_mv_create(spark, tname, str(tmp_path / "mv"))
+    try:
+        rows([0, 1, 2], 1).write.insertInto(tname)
+        rows([1], 7).write.insertInto(tname, overwrite=True)
+        spark.catalog.refreshTable(tname)
+        got = sorted(
+            (r.pt, r.n_orders) for r in spark.table(tname).collect()
+        )
+        assert got == [(0, 1), (1, 7), (2, 1)]
+        conf = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+        assert conf.upper() == "STATIC"
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tname}")

@@ -51,9 +51,10 @@ import pytest
 
 from eclypsium_etl_spark import registry
 from eclypsium_etl_spark.io import source_stamp
+from eclypsium_etl_spark.schemas import TABLES
 
-from .conftest import FIXTURE_TABLES, SF_CHECK
-from .parity import compare
+from .conftest import SF_CHECK
+from .parity import compare, oracle_con
 
 pytestmark = pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_NULL_SWEEP"),
@@ -133,7 +134,7 @@ def _null_fixture_dir() -> str:
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     con = duckdb.connect()
-    for t in FIXTURE_TABLES:
+    for t in TABLES:
         src = os.path.join(SF_CHECK, f"{t}.parquet")
         dst = os.path.join(tmp, f"{t}.parquet")
         if t in _MASKS:
@@ -158,13 +159,7 @@ def null_fx() -> str:
 
 @pytest.fixture(scope="session")
 def duck_null(null_fx):
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{null_fx}/{t}.parquet')"
-        )
-    return con
+    return oracle_con(null_fx)
 
 
 def test_masks_actually_inject(duck_null):

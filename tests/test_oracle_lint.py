@@ -11,37 +11,23 @@ import pytest
 
 from eclypsium_etl_spark import registry
 
-from .conftest import SF_CHECK, make_duck
-
 _, ORACLE = registry.load_all()
 
 
-@pytest.fixture(scope="module")
-def duck():
-    return make_duck(SF_CHECK)
-
-
 @pytest.mark.parametrize("name", sorted(ORACLE))
-def test_oracle_plans_cleanly(name, duck):
+def test_oracle_plans_cleanly(name, duck_check):
     sql = ORACLE[name]
     assert "read_parquet" not in sql, "oracles must use the registered views"
     assert "/root/" not in sql, "oracles must not hardcode paths"
-    duck.execute(f"EXPLAIN {sql}")  # binder+planner; raises on any error
+    duck_check.execute(f"EXPLAIN {sql}")  # binder+planner; raises on any error
 
 
 def test_ordered_queries_is_a_permutation():
-    """The harness-facing ordering must expose exactly the registry — a
-    query added without an order entry still appears (appended), and a
-    stale order entry must not shadow or drop anything."""
+    """The harness-facing ordering must expose exactly the registry:
+    nothing dropped, nothing duplicated."""
     q, _ = registry.load_all()
     ordered = registry.ordered_queries()
     assert list(sorted(ordered)) == list(sorted(q))
-    assert len(registry._CHEAP_FIRST) == len(set(registry._CHEAP_FIRST))
-    # a typo'd/stale order entry would be silently skipped and the query
-    # appended last, breaking the baked-in constraints (e.g. q63 before
-    # q71) with everything green — so every entry must resolve
-    stale = set(registry._CHEAP_FIRST) - set(q)
-    assert not stale, f"stale _CHEAP_FIRST entries: {stale}"
     order = list(ordered)
     assert order.index("q63_dedup_near") < order.index("q71_dedup_minhash_lsh")
 
@@ -301,7 +287,7 @@ def test_divergence_lint_detects_offenders():
     ) == set()
 
 
-def test_no_negative_zero_oracle_cells(duck):
+def test_no_negative_zero_oracle_cells(duck_check):
     """Dynamic -0.0 sweep (round 6): Spark round() normalizes -0.0 to
     +0.0 while DuckDB round() preserves it (verified on pyspark 4.1.2 /
     duckdb 1.x), and both the local canonicalizer (repr) and the driver
@@ -315,7 +301,7 @@ def test_no_negative_zero_oracle_cells(duck):
 
     offenders = []
     for name in sorted(ORACLE):
-        pdf = duck.execute(ORACLE[name]).df()
+        pdf = duck_check.execute(ORACLE[name]).df()
         for col in pdf.columns:
             if pdf[col].dtype.kind != "f":
                 continue
@@ -336,8 +322,7 @@ def test_no_negative_zero_oracle_cells(duck):
 
 def test_evidence_adaptive_ordering(tmp_path):
     """ordered_queries() self-adapts to the driver's CORRECTNESS files:
-    red ids first, never-sampled second, green last, _CHEAP_FIRST
-    relative order preserved within each class. Pinned on synthetic
+    red ids first, never-sampled second, green last. Pinned on synthetic
     evidence (so the test survives future rounds changing the real
     files) and on the live repo state (no green id may precede a
     never-sampled one — the evidence-conversion contract)."""

@@ -50,9 +50,10 @@ import pytest
 
 from eclypsium_etl_spark import registry
 from eclypsium_etl_spark.io import source_stamp
+from eclypsium_etl_spark.schemas import TABLES
 
-from .conftest import FIXTURE_TABLES, SF_CHECK
-from .parity import compare
+from .conftest import SF_CHECK
+from .parity import compare, oracle_con
 
 pytestmark = pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_SKEW_SWEEP"),
@@ -127,7 +128,7 @@ def _skew_fixture_dir() -> str:
     os.makedirs(tmp)
     con = duckdb.connect()
     masks = _masks(con, SF_CHECK)
-    for t in FIXTURE_TABLES:
+    for t in TABLES:
         src = os.path.join(SF_CHECK, f"{t}.parquet")
         dst = os.path.join(tmp, f"{t}.parquet")
         if t in masks:
@@ -152,13 +153,7 @@ def skew_fx() -> str:
 
 @pytest.fixture(scope="session")
 def duck_skew(skew_fx):
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{skew_fx}/{t}.parquet')"
-        )
-    return con
+    return oracle_con(skew_fx)
 
 
 def test_keys_actually_hot(duck_skew):

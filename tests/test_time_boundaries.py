@@ -60,9 +60,10 @@ import pytest
 
 from eclypsium_etl_spark import registry
 from eclypsium_etl_spark.io import source_stamp
+from eclypsium_etl_spark.schemas import TABLES
 
-from .conftest import FIXTURE_TABLES, SF_CHECK
-from .parity import compare
+from .conftest import SF_CHECK
+from .parity import compare, oracle_con
 
 pytestmark = pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_TIME_SWEEP"),
@@ -167,7 +168,7 @@ def _time_fixture_dir() -> str:
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     con = duckdb.connect()
-    for t in FIXTURE_TABLES:
+    for t in TABLES:
         src = os.path.join(SF_CHECK, f"{t}.parquet")
         dst = os.path.join(tmp, f"{t}.parquet")
         if t in _MASKS:
@@ -192,13 +193,7 @@ def time_fx() -> str:
 
 @pytest.fixture(scope="session")
 def duck_time(time_fx):
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{time_fx}/{t}.parquet')"
-        )
-    return con
+    return oracle_con(time_fx)
 
 
 def test_instants_actually_planted(duck_time):

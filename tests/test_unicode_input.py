@@ -34,14 +34,14 @@ import os
 import shutil
 import tempfile
 
-import duckdb
 import pytest
 
 from eclypsium_etl_spark import registry
 from eclypsium_etl_spark.io import source_stamp
+from eclypsium_etl_spark.schemas import TABLES
 
-from .conftest import FIXTURE_TABLES, SF_CHECK
-from .parity import compare
+from .conftest import SF_CHECK
+from .parity import compare, oracle_con
 
 pytestmark = pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_UNICODE_SWEEP"),
@@ -88,7 +88,7 @@ def _unicode_fixture_dir() -> str:
     d["text"] = d.apply(tx, axis=1)
     d["n_chars"] = d["text"].str.len()
     d.to_parquet(os.path.join(tmp, "documents.parquet"), index=False)
-    for t in FIXTURE_TABLES:
+    for t in TABLES:
         if t != "documents":
             shutil.copyfile(
                 os.path.join(SF_CHECK, f"{t}.parquet"),
@@ -109,13 +109,7 @@ def unicode_fx() -> str:
 
 @pytest.fixture(scope="session")
 def duck_unicode(unicode_fx):
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{unicode_fx}/{t}.parquet')"
-        )
-    return con
+    return oracle_con(unicode_fx)
 
 
 def test_fixture_actually_non_ascii(duck_unicode):
