@@ -209,6 +209,29 @@ def fixture_suffix(sf_dir: str) -> str:
     )
 
 
+def tmp_location(name: str) -> str:
+    """``name`` under the engine's shared temp dir, which is created on
+    first use: memo layouts, staged sinks and managed-table LOCATIONs."""
+    import os
+    import tempfile
+
+    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
+    os.makedirs(base, exist_ok=True)
+    return os.path.join(base, name)
+
+
+def recreate_table(spark: SparkSession, name: str, loc: str, ddl: str) -> None:
+    """Rebuild catalog table ``name`` from scratch: clear its files at
+    ``loc``, drop it, then run ``ddl`` (the CREATE TABLE ... LOCATION
+    ``loc`` statement). A DROP keeps an external table's files, so the
+    location is cleared first or a rerun would read the last run's rows."""
+    import shutil
+
+    shutil.rmtree(loc, ignore_errors=True)
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    spark.sql(ddl)
+
+
 def _commit_dir(tmp: str, out: str, is_complete) -> None:
     """Atomically install the COMPLETE build at ``tmp`` as ``out``.
 

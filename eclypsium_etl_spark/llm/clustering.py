@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import dot, dot_sql
-from ..io import table
+from ..io import table, tmp_location
 from ..registry import query
 
 _K = 8
@@ -234,19 +234,13 @@ def kmeans_fit(
         # float32 parquet round-trip is exact, so the memoized model is
         # bit-identical to the lazy one.
         import os
-        import tempfile
 
         from ..io import materialize_once, source_stamp
 
         slug = sf_dir.strip("/").replace("/", "_")
         stamp = source_stamp(os.path.join(sf_dir, "embeddings.parquet"))
-        base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-        ckey = os.path.join(
-            base, f"kmeans_cent_v1_k{k}_i{iterations}_{slug}_{stamp}"
-        )
-        akey = os.path.join(
-            base, f"kmeans_asg_v1_k{k}_i{iterations}_{slug}_{stamp}"
-        )
+        ckey = tmp_location(f"kmeans_cent_v1_k{k}_i{iterations}_{slug}_{stamp}")
+        akey = tmp_location(f"kmeans_asg_v1_k{k}_i{iterations}_{slug}_{stamp}")
         cents_m = materialize_once(
             spark, ckey, lambda p: centroids.write.parquet(p)
         )
@@ -309,7 +303,6 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     import atexit
     import os
     import shutil
-    import tempfile
     import uuid
 
     spark = pairs.sparkSession
@@ -322,9 +315,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         edges.select(F.col("src").alias("doc_id")).distinct()
         .withColumn("label", F.col("doc_id"))
     )
-    scratch = os.path.join(
-        tempfile.gettempdir(), "eclypsium_etl_spark", f"cc_{uuid.uuid4().hex[:12]}"
-    )
+    scratch = tmp_location(f"cc_{uuid.uuid4().hex[:12]}")
     prev_step = None
     try:
         for it in range(max_iter):
@@ -409,7 +400,6 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 20) -> DataFrame
     import atexit
     import os
     import shutil
-    import tempfile
     import uuid
 
     spark = pairs.sparkSession
@@ -418,9 +408,7 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 20) -> DataFrame
         .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .distinct()
     )
-    scratch = os.path.join(
-        tempfile.gettempdir(), "eclypsium_etl_spark", f"ccs_{uuid.uuid4().hex[:12]}"
-    )
+    scratch = tmp_location(f"ccs_{uuid.uuid4().hex[:12]}")
     # every vertex that appears in a pair — the output domain (roots stay
     # in the edge set as targets only, so they're re-added at the end)
     vertices = (
@@ -584,18 +572,13 @@ def semdedup_assignments(spark, sf_dir: str) -> DataFrame:
     Exposed as a helper so __spark_entry__'s warm-up can build it
     before the driver's correctness walk reaches q129 — the same
     pre-warm contract the shingle memo has."""
-    import os
-    import tempfile
-
     from ..io import materialize_once, source_stamp
 
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = em.filter(F.col("vec_id") < _K).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_emb")
     )
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
+    out = tmp_location(
         f"semdedup_asg_{sf_dir.strip('/').replace('/', '_')}"
         f"_{source_stamp(f'{sf_dir}/embeddings.parquet')}",
     )
@@ -949,13 +932,7 @@ def stream_kmeans_fold(spark, src: str, init_cents, ckpt: str) -> list:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    run_available_now(
-        lambda name, c: feed.writeStream.foreachBatch(update_model)
-        .queryName(name)
-        .option("checkpointLocation", c)
-        .trigger(availableNow=True),
-        ckpt=ckpt,
-    )
+    run_available_now(feed.writeStream.foreachBatch(update_model), ckpt)
     # zero-batch drain (empty feed): state never loaded — read sidecar
     final = holder.get("state") or _skm_load_state(ckpt, init_cents)
     return final["cents"]
@@ -1043,23 +1020,11 @@ def q332_stream_kmeans(spark, sf_dir) -> DataFrame:
     exactly once (the r9 verdict's double-count hazard, pin-tested).
     The final full-corpus assignment is the one corpus-sized pass, same
     as q327's sampled shape."""
-    import os
     import tempfile
-    import time
+
+    from ..streaming.queries import wave_feed
 
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    src = tempfile.mkdtemp(prefix="eclypsium_skm_feed_")
-    t0 = time.time()
-    for i in range(2):
-        staged = os.path.join(src, f"_stage_b{i}")
-        em.filter(F.col("vec_id") % 2 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staged)
-        part = next(f for f in os.listdir(staged) if f.endswith(".parquet"))
-        dst = os.path.join(src, f"b{i}.parquet")
-        os.rename(os.path.join(staged, part), dst)
-        os.utime(dst, (t0 - 60 + 30 * i, t0 - 60 + 30 * i))
-
     # init: first k of the FIRST batch in vec_id order (known = evens)
     init_rows = (
         em.filter(F.col("vec_id") % 2 == 0)
@@ -1068,8 +1033,13 @@ def q332_stream_kmeans(spark, sf_dir) -> DataFrame:
         .collect()
     )
     init_cents = [(r["vec_id"], r["embedding"]) for r in init_rows]
-    ckpt = tempfile.mkdtemp(prefix="eclypsium_ckpt_")
-    cents = stream_kmeans_fold(spark, src, init_cents, ckpt)
+    # the checkpoint carries the model sidecar, so the fold is given one
+    # it does not delete; the returned centroids no longer need it
+    with (
+        wave_feed(em, "vec_id", 2, "eclypsium_skm_feed_") as src,
+        tempfile.TemporaryDirectory(prefix="eclypsium_ckpt_") as ckpt,
+    ):
+        cents = stream_kmeans_fold(spark, src, init_cents, ckpt)
 
     final_cents = spark.createDataFrame(cents, _SKM_CENT_SCHEMA)
     asg = assign_to_centroids(em, final_cents)

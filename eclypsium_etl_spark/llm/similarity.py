@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import dot, dot_sql
-from ..io import table
+from ..io import table, tmp_location
 from ..registry import query
 
 _N_QUERIES = 10   # q64: vectors with vec_id < 10 are the query set
@@ -1949,16 +1949,13 @@ def _q340_rotated(spark, sf_dir) -> DataFrame:
     duplicating the rotation subtree into each unrolled Lloyd lineage,
     the q335 plan-blowup guard). v1 + the rotation name in the key."""
     import os
-    import tempfile
 
     from ..io import materialize_once, source_stamp
 
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     rot = em.select("vec_id", F.expr(_ROT_EXPR_SPARK).alias("embedding"))
     src_pq = os.path.join(sf_dir, "embeddings.parquet")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
+    out = tmp_location(
         f"q340_rot_hadamard_v1_{sf_dir.strip('/').replace('/', '_')}"
         f"_{source_stamp(src_pq)}",
     )
@@ -2379,7 +2376,6 @@ def _q335_resid(spark, sf_dir) -> DataFrame:
     is both the plan-blowup guard (see q335's docstring) and the
     production IVFADC shape."""
     import os
-    import tempfile
 
     from .clustering import kmeans_fit
     from ..io import materialize_once, source_stamp
@@ -2408,9 +2404,7 @@ def _q335_resid(spark, sf_dir) -> DataFrame:
         )
     )
     src_pq = os.path.join(sf_dir, "embeddings.parquet")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
+    out = tmp_location(
         # v1 + model knobs in the key, bumped in LOCKSTEP with the
         # kmeans_cent_v1 memo it derives from: a kernel-version bump that
         # refreshed the centroid memo but not this one would silently
@@ -2795,7 +2789,6 @@ def q337_ivfpq_percell(spark, sf_dir) -> DataFrame:
     is embarrassingly parallel (cells are disjoint) and serving is
     identical to q335 with a (cell, code)-keyed decode map."""
     import os
-    import tempfile
 
     from .clustering import kmeans_fit
     from ..io import materialize_once, source_stamp
@@ -2838,9 +2831,7 @@ def q337_ivfpq_percell(spark, sf_dir) -> DataFrame:
             path
         )
 
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
+    out = tmp_location(
         f"q337_cbs_v1_{sf_dir.strip('/').replace('/', '_')}"
         f"_{source_stamp(os.path.join(sf_dir, 'embeddings.parquet'))}",
     )
@@ -3017,15 +3008,12 @@ def _clustered_corpus_memo(spark, sf_dir) -> DataFrame:
     re-references its source ~2^iters times — the q331/q335 plan-blowup
     class; a memoized parquet makes each re-reference a scan)."""
     import os
-    import tempfile
 
     from ..io import materialize_once, source_stamp
 
     slug = sf_dir.strip("/").replace("/", "_")
     stamp = source_stamp(os.path.join(sf_dir, "embeddings.parquet"))
-    key = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
+    key = tmp_location(
         f"clu_corpus_v1_{slug}_{stamp}",
     )
     return materialize_once(
@@ -3140,27 +3128,19 @@ def q343_ivf_clustered(spark, sf_dir) -> DataFrame:
     # memoize the trained model: the lazy Lloyd chain would otherwise
     # re-run per downstream reference (occupancy, candidates, top-k)
     import os
-    import tempfile
 
     from ..io import materialize_once, source_stamp
 
     slug = sf_dir.strip("/").replace("/", "_")
     stamp = source_stamp(os.path.join(sf_dir, "embeddings.parquet"))
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
     cents = materialize_once(
         spark,
-        os.path.join(
-            base,
-            f"clu_ivf_cent_v1_k{_CLU_K}_i{_IVF_ITERS}_{slug}_{stamp}",
-        ),
+        tmp_location(f"clu_ivf_cent_v1_k{_CLU_K}_i{_IVF_ITERS}_{slug}_{stamp}"),
         lambda p: cents.write.parquet(p),
     )
     asg = materialize_once(
         spark,
-        os.path.join(
-            base,
-            f"clu_ivf_asg_v1_k{_CLU_K}_i{_IVF_ITERS}_{slug}_{stamp}",
-        ),
+        tmp_location(f"clu_ivf_asg_v1_k{_CLU_K}_i{_IVF_ITERS}_{slug}_{stamp}"),
         lambda p: assign_to_centroids(clu, cents).write.parquet(p),
     )
 

@@ -14,7 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import davg, davg_sql
-from ..io import table, table_spread
+from ..io import table, table_spread, tmp_location
 from ..registry import ORACLE, query
 
 
@@ -4375,15 +4375,10 @@ def _rrf_sparse_index(spark, sf_dir) -> DataFrame:
     bounded shards, so no per-token partition is unsplittable at
     100 TB. Shard reassembly is LOSSLESS for scoring: the BM25 join
     keys on token alone, and the shard column only shapes layout."""
-    import os
-    import tempfile
-
     from ..io import materialize_once, source_stamp
 
     d = table(spark, sf_dir, "documents")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
+    out = tmp_location(
         f"rrfidx_{sf_dir.strip('/').replace('/', '_')}"
         f"_{source_stamp(f'{sf_dir}/documents.parquet')}",
     )
@@ -4431,15 +4426,10 @@ def _rrf_dense_index(spark, sf_dir) -> DataFrame:
     signed-safe 32-bit halves) NEXT TO the float embedding, so the
     Hamming screen reads 8 bytes/vector and column pruning fetches the
     floats only for the rerank set."""
-    import os
-    import tempfile
-
     from ..io import materialize_once, source_stamp
     from .similarity import _bq_pack_expr
 
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
+    out = tmp_location(
         f"bqidx_{sf_dir.strip('/').replace('/', '_')}"
         f"_{source_stamp(f'{sf_dir}/embeddings.parquet')}",
     )
@@ -5077,18 +5067,13 @@ def _rag_chunk_index(spark, sf_dir) -> DataFrame:
     from, so a cluster deployment can bucket/cluster the landed table
     by it. Build cost amortizes across every query thereafter — the
     100 TB retrieval economics q352 documents."""
-    import os
-    import tempfile
-
     from ..io import materialize_once, source_stamp
 
     # Memo key folds in the chunker constants and a posting-layout
     # version token alongside the source stamp (ADVICE r12): a later
     # change to _CAP_S/_CAP_W or the posting columns on a machine with
     # an unchanged fixture must MISS the memo, not serve a stale index.
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
+    out = tmp_location(
         f"q361idx_v1_w{_CAP_W}s{_CAP_S}"
         f"_{sf_dir.strip('/').replace('/', '_')}"
         f"_{source_stamp(f'{sf_dir}/documents.parquet')}",
@@ -5248,23 +5233,18 @@ def _seed_posting_table(spark, sf_dir: str, qid: str, docs: DataFrame) -> str:
     PARTITIONED BY the token-hash shard) seeded with ``docs``' postings;
     returns its name. The table-level partitionOverwriteMode makes every
     overwriting insertInto dynamic without touching the session conf."""
-    import os
-    import shutil
-    import tempfile
+    from ..io import fixture_suffix, recreate_table
 
-    from ..io import fixture_suffix
-
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
     tpost = f"t_{qid}_post_{fixture_suffix(sf_dir)}"
-    loc = os.path.join(base, f"{tpost}_tbl")
-    shutil.rmtree(loc, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {tpost}")
-    spark.sql(
+    loc = tmp_location(f"{tpost}_tbl")
+    recreate_table(
+        spark,
+        tpost,
+        loc,
         f"CREATE TABLE {tpost} (doc_id BIGINT, chunk_id BIGINT, "
         f"token STRING, tf BIGINT, shard INT) USING parquet "
         f"PARTITIONED BY (shard) OPTIONS (partitionOverwriteMode 'dynamic') "
-        f"LOCATION '{loc}'"
+        f"LOCATION '{loc}'",
     )
     _post_of(docs).write.insertInto(tpost)
     spark.catalog.refreshTable(tpost)

@@ -9,13 +9,11 @@ today" with the shapes any real warehouse workload adds on day two.
 
 from __future__ import annotations
 
-import os
-import tempfile
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import dsum, dsum_sql
-from ..io import materialize_once, table
+from ..io import materialize_once, table, tmp_location
 from ..registry import query
 
 
@@ -216,9 +214,7 @@ def partitioned_orders_path(sf_dir: str) -> str:
     mtime/size stamp (regenerated fixtures must not hit a stale layout)."""
     from ..io import source_stamp
 
-    return os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
+    return tmp_location(
         f"orders_partitioned_{sf_dir.strip('/').replace('/', '_')}"
         f"_{source_stamp(f'{sf_dir}/orders.parquet')}",
     )

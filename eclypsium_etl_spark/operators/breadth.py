@@ -10,9 +10,8 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..io import table
+from ..io import table, tmp_location
 from ..registry import query
-from .sources import _tmpdir
 
 
 @query(
@@ -177,9 +176,7 @@ def q101_stream_stream_join(spark, sf_dir) -> DataFrame:
     Spark can evict join state — THE requirement for unbounded
     stream-stream joins. availableNow replay of the finite fixture
     converges to the batch range join the oracle states."""
-    from .queries_stream_helpers import run_stream_to_memory
-
-    from ..streaming.queries import stream_events
+    from ..streaming.queries import drain_to_memory, stream_events
 
     a = (
         stream_events(spark, sf_dir)
@@ -207,7 +204,7 @@ def q101_stream_stream_join(spark, sf_dir) -> DataFrame:
         & (F.col("ts_b") > F.col("ts_a"))
         & (F.col("ts_b") <= F.col("ts_a") + F.expr("INTERVAL 30 MINUTES")),
     ).select("eid_a", "eid_b", "user_id")
-    return run_stream_to_memory(spark, joined)
+    return drain_to_memory(joined)
 
 
 @query(
@@ -689,7 +686,7 @@ def q270_fixed_width_source(spark, sf_dir) -> DataFrame:
     one null field, silently dropping the row). Inherent format
     limitation, documented: an empty STRING field is indistinguishable
     from NULL after the round-trip."""
-    out = _tmpdir(f"q270_fw_{os.path.basename(sf_dir)}")
+    out = tmp_location(f"q270_fw_{os.path.basename(sf_dir)}")
     o = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 20 == 0)
 
     def fw(col, width):
@@ -775,7 +772,7 @@ def q272_json_permissive(spark, sf_dir) -> DataFrame:
     string from the source table. doc_id survives on corrupt rows only
     because the harness re-derives it from the captured raw string —
     real pipelines key the dead-letter table the same way."""
-    out = _tmpdir(f"q272_pjson_{os.path.basename(sf_dir)}")
+    out = tmp_location(f"q272_pjson_{os.path.basename(sf_dir)}")
     d = table(spark, sf_dir, "documents")
     line = F.when(
         F.col("doc_id") % 7 == 0,

@@ -11,12 +11,11 @@ change detection between snapshots.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import dsum, dsum_sql
-from ..io import table
+from ..io import recreate_table, table, tmp_location
 from ..registry import query
 
 
@@ -521,21 +520,18 @@ def _scd2_create_init(spark, sf_dir, tname: str) -> None:
     INSERT the initial load (every customer at version 1, valid from
     _SCD2_INIT_DATE). Pre-clears location + table (q244 discipline) so
     every call rebuilds deterministically."""
-    import shutil
-
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
-    loc = os.path.join(base, f"{tname}_tbl_{os.path.basename(sf_dir)}")
-    shutil.rmtree(loc, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {tname}")
-    spark.sql(
+    loc = tmp_location(f"{tname}_tbl_{os.path.basename(sf_dir)}")
+    recreate_table(
+        spark,
+        tname,
+        loc,
         f"""
         CREATE TABLE {tname} (
             k BIGINT, name STRING, seg STRING,
             valid_from DATE, valid_to DATE,
             is_current BOOLEAN, version INT
         ) USING parquet LOCATION '{loc}'
-        """
+        """,
     )
     c = table(spark, sf_dir, "customer")
     init = c.select(
@@ -589,11 +585,7 @@ def _scd2_build_wave1(spark, sf_dir, tname: str) -> str:
         attr="seg",
         eff_date=F.to_date(F.lit(_SCD2_EFF_DATE)),
     )
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"{tname}_stage_{os.path.basename(sf_dir)}",
-    )
+    stage = tmp_location(f"{tname}_stage_{os.path.basename(sf_dir)}")
     _scd2_publish(spark, tname, stage, merged)
     return tname
 
@@ -690,11 +682,7 @@ def q324_scd2_multiwave(spark, sf_dir) -> DataFrame:
         attr="seg",
         eff_date=F.to_date(F.lit(_SCD2_W2_DATE)),
     )
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"{tname}_stage2_{os.path.basename(sf_dir)}",
-    )
+    stage = tmp_location(f"{tname}_stage2_{os.path.basename(sf_dir)}")
     _scd2_publish(spark, tname, stage, merged2)
     return _scd2_final_view(spark, tname)
 
@@ -786,11 +774,7 @@ def q326_scd2_tombstone(spark, sf_dir) -> DataFrame:
         key="k",
         eff_date=F.to_date(F.lit(_SCD2_W2_DATE)),
     )
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"{tname}_stage2_{os.path.basename(sf_dir)}",
-    )
+    stage = tmp_location(f"{tname}_stage2_{os.path.basename(sf_dir)}")
     _scd2_publish(spark, tname, stage, tombstoned)
     return _scd2_final_view(spark, tname)
 
@@ -825,46 +809,26 @@ def q329_stream_scd2(spark, sf_dir) -> DataFrame:
     the failed wave instead of replaying history (the publish is
     idempotent per batch_id: a retried batch re-runs the same merge on
     the same pre-merge state because the swap is the last step)."""
-    import time
-
-    from ..streaming.queries import run_available_now
+    from ..streaming.queries import run_available_now, staged_feed
 
     tname = "t_q329"
     _scd2_create_init(spark, sf_dir, tname)
     c = table(spark, sf_dir, "customer")
     waves = [
-        (_SCD2_EFF_DATE, _scd2_wave1_batch(c)),
-        (_SCD2_W2_DATE, _scd2_wave2_batch(c)),
+        _scd2_wave1_batch(c).withColumn("eff", F.lit(_SCD2_EFF_DATE)),
+        _scd2_wave2_batch(c).withColumn("eff", F.lit(_SCD2_W2_DATE)),
     ]
-    src = tempfile.mkdtemp(prefix="eclypsium_scd2_feed_")
-    t0 = time.time()
-    for i, (eff, wave) in enumerate(waves):
-        staged = os.path.join(src, f"_stage_w{i}")
-        wave.withColumn("eff", F.lit(eff)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staged)
-        part = next(
-            f for f in os.listdir(staged) if f.endswith(".parquet")
+    with staged_feed(waves, "eclypsium_scd2_feed_") as src:
+        feed = (
+            spark.readStream.schema("k bigint, name string, seg string, eff string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
         )
-        dst = os.path.join(src, f"w{i}.parquet")
-        os.rename(os.path.join(staged, part), dst)
-        # explicit, well-separated mtimes: the file source processes
-        # oldest-first, so wave order is pinned without sleeping
-        os.utime(dst, (t0 - 60 + 30 * i, t0 - 60 + 30 * i))
-
-    feed = (
-        spark.readStream.schema("k bigint, name string, seg string, eff string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    run_available_now(
-        lambda name, ckpt: feed.writeStream.foreachBatch(
-            scd2_wave_handler(spark, tname, os.path.basename(sf_dir))
+        run_available_now(
+            feed.writeStream.foreachBatch(
+                scd2_wave_handler(spark, tname, os.path.basename(sf_dir))
+            )
         )
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
     return _scd2_final_view(spark, tname)
 
 
@@ -878,8 +842,6 @@ def scd2_wave_handler(spark, tname: str, tag: str):
     guard never fires because it only evaluates on CHANGED rows).
     Pin-tested in tests/test_streaming.py (commit-log deletion replay)."""
 
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-
     def apply_wave(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -892,9 +854,7 @@ def scd2_wave_handler(spark, tname: str, tag: str):
                 attr="seg",
                 eff_date=F.to_date(F.lit(eff)),
             )
-            stage = os.path.join(
-                base, f"{tname}_stage_b{batch_id}_{eff}_{tag}"
-            )
+            stage = tmp_location(f"{tname}_stage_b{batch_id}_{eff}_{tag}")
             _scd2_publish(spark, tname, stage, merged)
 
     return apply_wave
@@ -1066,22 +1026,19 @@ def q333_scd2_multiattr(spark, sf_dir) -> DataFrame:
     is the family's differential pin for it. Same managed-table build
     as q317 (CREATE + INSERT init + merge + staged INSERT OVERWRITE
     publish); one key-hash join, change batch broadcasts under AQE."""
-    import shutil
-
     tname = "t_q333"
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
-    loc = os.path.join(base, f"{tname}_tbl_{os.path.basename(sf_dir)}")
-    shutil.rmtree(loc, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {tname}")
-    spark.sql(
+    loc = tmp_location(f"{tname}_tbl_{os.path.basename(sf_dir)}")
+    recreate_table(
+        spark,
+        tname,
+        loc,
         f"""
         CREATE TABLE {tname} (
             k BIGINT, name STRING, seg STRING, nat BIGINT,
             valid_from DATE, valid_to DATE,
             is_current BOOLEAN, version INT
         ) USING parquet LOCATION '{loc}'
-        """
+        """,
     )
     c = table(spark, sf_dir, "customer")
     k = F.col("c_custkey")
@@ -1128,7 +1085,7 @@ def q333_scd2_multiattr(spark, sf_dir) -> DataFrame:
         attrs=["seg", "nat"],
         eff_date=F.to_date(F.lit(_SCD2_EFF_DATE)),
     )
-    stage = os.path.join(base, f"{tname}_stage_{os.path.basename(sf_dir)}")
+    stage = tmp_location(f"{tname}_stage_{os.path.basename(sf_dir)}")
     _scd2_publish(spark, tname, stage, merged)
     return spark.table(tname).select(
         "k",
@@ -1238,22 +1195,19 @@ def q336_scd2_hashdiff(spark, sf_dir) -> DataFrame:
     total over nulls AND collision-free — no sentinel string or
     separator char a value could forge (see _hd_enc_spark). Same
     managed-table build + staged publish as q317/q333."""
-    import shutil
-
     tname = "t_q336"
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
-    loc = os.path.join(base, f"{tname}_tbl_{os.path.basename(sf_dir)}")
-    shutil.rmtree(loc, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {tname}")
-    spark.sql(
+    loc = tmp_location(f"{tname}_tbl_{os.path.basename(sf_dir)}")
+    recreate_table(
+        spark,
+        tname,
+        loc,
         f"""
         CREATE TABLE {tname} (
             k BIGINT, name STRING, seg STRING, nat BIGINT, hashdiff STRING,
             valid_from DATE, valid_to DATE,
             is_current BOOLEAN, version INT
         ) USING parquet LOCATION '{loc}'
-        """
+        """,
     )
     c = table(spark, sf_dir, "customer")
     nat0 = F.col("c_nationkey").cast("bigint")
@@ -1300,7 +1254,7 @@ def q336_scd2_hashdiff(spark, sf_dir) -> DataFrame:
         eff_date=F.to_date(F.lit(_SCD2_EFF_DATE)),
         payload=["seg", "nat"],
     )
-    stage = os.path.join(base, f"{tname}_stage_{os.path.basename(sf_dir)}")
+    stage = tmp_location(f"{tname}_stage_{os.path.basename(sf_dir)}")
     _scd2_publish(spark, tname, stage, merged)
     return spark.table(tname).select(
         "k",
@@ -1565,11 +1519,7 @@ def q338_scd2_retro(spark, sf_dir) -> DataFrame:
         attr="seg",
         eff_date=F.to_date(F.lit(_SCD2_RETRO_DATE)),
     )
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"{tname}_retro_stage_{os.path.basename(sf_dir)}",
-    )
+    stage = tmp_location(f"{tname}_retro_stage_{os.path.basename(sf_dir)}")
     _scd2_publish(spark, tname, stage, merged)
     return _scd2_final_view(spark, tname)
 

@@ -18,20 +18,13 @@ Reference behavior re-expressed Spark-first:
 from __future__ import annotations
 
 import os
-import tempfile
 from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..io import sink_overwrite, table
+from ..io import recreate_table, sink_overwrite, table, tmp_location
 from ..registry import query
 from ..schemas import EVENT_PROPS
-
-
-def _tmpdir(name: str) -> str:
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
-    return os.path.join(base, name)
 
 
 def _staging_key(sf_dir: str, source: str = "documents.parquet") -> str:
@@ -102,7 +95,7 @@ def q04_sink_overwrite(spark, sf_dir) -> DataFrame:
     """Idempotent full-replace sink, verified by re-read: write the filtered
     orders to Parquet with mode("overwrite") twice (rerun-safety, the
     reference's contract), then scan the result back."""
-    out = _tmpdir("q04_sink")
+    out = tmp_location("q04_sink")
     df = (
         table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
@@ -139,9 +132,9 @@ def q05_sink_jdbc(spark, sf_dir) -> DataFrame:
     from ..io import read_jdbc, write_jdbc
 
     spark._jvm.java.lang.System.setProperty(
-        "derby.system.home", _tmpdir("derby_home")
+        "derby.system.home", tmp_location("derby_home")
     )
-    db = _tmpdir(f"q05_derby_{os.path.basename(sf_dir)}")
+    db = tmp_location(f"q05_derby_{os.path.basename(sf_dir)}")
     url = f"jdbc:derby:{db};create=true"
     df = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
@@ -175,7 +168,7 @@ def q93_source_csv(spark, sf_dir) -> DataFrame:
     type drift across files)."""
     from ..schemas import NATION
 
-    out = _tmpdir(f"q93_csv_{os.path.basename(sf_dir)}")
+    out = tmp_location(f"q93_csv_{os.path.basename(sf_dir)}")
     n = table(spark, sf_dir, "nation")
     n.write.mode("overwrite").option("header", True).csv(out)
     return spark.read.schema(NATION).option("header", True).csv(out)
@@ -190,7 +183,7 @@ def q93_source_csv(spark, sf_dir) -> DataFrame:
 def q94_source_orc(spark, sf_dir) -> DataFrame:
     """ORC source/sink round-trip — second columnar format, same pushdown
     and pruning machinery as Parquet."""
-    out = _tmpdir(f"q94_orc_{os.path.basename(sf_dir)}")
+    out = tmp_location(f"q94_orc_{os.path.basename(sf_dir)}")
     p = table(spark, sf_dir, "part").select(
         "p_partkey", "p_name", "p_brand", "p_retailprice"
     )
@@ -252,7 +245,7 @@ def q148_schema_evolution(spark, sf_dir) -> DataFrame:
     you pin the schema explicitly instead); column pruning and pushdown
     still reach each file with its own physical schema. The oracle states
     the expected union semantics directly over the source table."""
-    out = _tmpdir(f"q148_evo_{os.path.basename(sf_dir)}")
+    out = tmp_location(f"q148_evo_{os.path.basename(sf_dir)}")
     o = table(spark, sf_dir, "orders")
     v1 = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_totalprice")
     v2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
@@ -285,7 +278,7 @@ def q155_sink_dynamic_partition(spark, sf_dir) -> DataFrame:
     the expected post-rewrite state. partitionBy(source) also gives
     source-pruned scans to every downstream per-source operator (q149,
     q154, q122)."""
-    out = _tmpdir(f"q155_dpo_{os.path.basename(sf_dir)}")
+    out = tmp_location(f"q155_dpo_{os.path.basename(sf_dir)}")
     d = table(spark, sf_dir, "documents")
     d.write.mode("overwrite").partitionBy("source").parquet(out)
     upd = d.filter(F.col("source").isin("src0", "src1")).withColumn(
@@ -323,7 +316,7 @@ def q164_source_text(spark, sf_dir) -> DataFrame:
     exact. (Line-oriented formats require the no-embedded-newline
     invariant the fixture satisfies; real crawl pipelines escape or
     length-prefix instead.)"""
-    out = _tmpdir(f"q164_text_{os.path.basename(sf_dir)}")
+    out = tmp_location(f"q164_text_{os.path.basename(sf_dir)}")
     d = table(spark, sf_dir, "documents")
     d.select("text").write.mode("overwrite").text(out)
     return spark.read.text(out).select(
@@ -348,7 +341,7 @@ def q167_source_xml(spark, sf_dir) -> DataFrame:
     deliver."""
     from ..schemas import NATION
 
-    out = _tmpdir(f"q167_xml_{os.path.basename(sf_dir)}")
+    out = tmp_location(f"q167_xml_{os.path.basename(sf_dir)}")
     n = table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -387,7 +380,7 @@ def q190_sink_jsonl(spark, sf_dir) -> DataFrame:
     schema-on-read is mandatory and numbers would otherwise widen or
     re-infer per file. Round-trip equality IS the check: text survives
     JSON escaping byte-exact."""
-    out = _tmpdir(f"q190_jsonl_{os.path.basename(sf_dir)}")
+    out = tmp_location(f"q190_jsonl_{os.path.basename(sf_dir)}")
     d = table(spark, sf_dir, "documents")
     d.write.mode("overwrite").partitionBy("source").json(out)
     schema = T.StructType(
@@ -515,7 +508,7 @@ def q234_csv_permissive(spark, sf_dir) -> DataFrame:
     dead-letter path) is the q58 foreachBatch pattern."""
     import shutil
 
-    out = _tmpdir(f"q234_csv_{os.path.basename(sf_dir)}")
+    out = tmp_location(f"q234_csv_{os.path.basename(sf_dir)}")
     shutil.rmtree(out, ignore_errors=True)
     n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     n.write.mode("overwrite").csv(out)
@@ -569,8 +562,8 @@ def q235_compact_small_files(spark, sf_dir) -> DataFrame:
     count actually collapses."""
     import shutil
 
-    frag = _tmpdir(f"q235_frag_{os.path.basename(sf_dir)}")
-    out = _tmpdir(f"q235_compact_{os.path.basename(sf_dir)}")
+    frag = tmp_location(f"q235_frag_{os.path.basename(sf_dir)}")
+    out = tmp_location(f"q235_compact_{os.path.basename(sf_dir)}")
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"]
     o = table(spark, sf_dir, "orders").select(*cols)
     o.repartition(64).write.mode("overwrite").parquet(frag)
@@ -619,21 +612,20 @@ def q244_ddl_defaults(spark, sf_dir) -> DataFrame:
     is cleared first: the driver's own session may not configure a
     warehouse dir, and an external-table DROP keeps files — both
     rerun-safety hazards this query must own, not inherit."""
-    import shutil
-
-    loc = _tmpdir(f"q244_tbl_{os.path.basename(sf_dir)}")
-    shutil.rmtree(loc, ignore_errors=True)
-    table(spark, sf_dir, "nation").createOrReplaceTempView("nation_q244")
-    spark.sql("DROP TABLE IF EXISTS t_q244")
-    spark.sql(
+    loc = tmp_location(f"q244_tbl_{os.path.basename(sf_dir)}")
+    recreate_table(
+        spark,
+        "t_q244",
+        loc,
         f"""
         CREATE TABLE t_q244 (
             id BIGINT,
             status STRING DEFAULT 'new',
             score DOUBLE DEFAULT 0.5
         ) USING parquet LOCATION '{loc}'
-        """
+        """,
     )
+    table(spark, sf_dir, "nation").createOrReplaceTempView("nation_q244")
     spark.sql(
         "INSERT INTO t_q244 (id) SELECT CAST(n_nationkey AS BIGINT) FROM nation_q244"
     )
@@ -732,7 +724,7 @@ def q251_gzip_jsonl_source(spark, sf_dir) -> DataFrame:
     independently-parallel .gz parts), which is the operational fix:
     many medium gzip shards, never one giant one; re-compress to a
     splittable layout (parquet+zstd, q235) on first touch."""
-    out = _tmpdir(f"q251_gz_{os.path.basename(sf_dir)}")
+    out = tmp_location(f"q251_gz_{os.path.basename(sf_dir)}")
     d = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     (
         d.repartition(4)
@@ -768,7 +760,7 @@ def q252_binary_file_source(spark, sf_dir) -> DataFrame:
     groups small files per task."""
     import shutil
 
-    out = _tmpdir(f"q252_files_{_staging_key(sf_dir)}")
+    out = tmp_location(f"q252_files_{_staging_key(sf_dir)}")
     marker = os.path.join(out, "_STAGED")
     if not os.path.exists(marker):
         shutil.rmtree(out, ignore_errors=True)
@@ -842,7 +834,7 @@ def q253_tar_packed_assets(spark, sf_dir) -> DataFrame:
     import shutil
     import tarfile
 
-    out = _tmpdir(f"q253_tars_{_staging_key(sf_dir)}")
+    out = tmp_location(f"q253_tars_{_staging_key(sf_dir)}")
     marker = os.path.join(out, "_STAGED")
     if not os.path.exists(marker):
         shutil.rmtree(out, ignore_errors=True)
@@ -897,7 +889,7 @@ def q254_multiline_json(spark, sf_dir) -> DataFrame:
     import json
     import shutil
 
-    out = _tmpdir(f"q254_mljson_{os.path.basename(sf_dir)}")
+    out = tmp_location(f"q254_mljson_{os.path.basename(sf_dir)}")
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
     rows = [
@@ -933,7 +925,7 @@ def q255_csv_quoting(spark, sf_dir) -> DataFrame:
     the source column by the SAME expression the oracle uses, so the
     round trip is verified byte-for-byte; a parser that mangles any of
     the three hazards changes the hash."""
-    out = _tmpdir(f"q255_csvq_{os.path.basename(sf_dir)}")
+    out = tmp_location(f"q255_csvq_{os.path.basename(sf_dir)}")
     gnarly = F.concat(
         F.col("n_name"),
         F.lit(', officially "'),
@@ -1007,7 +999,7 @@ def q291_zip_packed_assets(spark, sf_dir) -> DataFrame:
     import shutil
     import zipfile
 
-    out = _tmpdir(f"q291_zips_{_staging_key(sf_dir)}")
+    out = tmp_location(f"q291_zips_{_staging_key(sf_dir)}")
     marker = os.path.join(out, "_STAGED")
     if not os.path.exists(marker):
         shutil.rmtree(out, ignore_errors=True)

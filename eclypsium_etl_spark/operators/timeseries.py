@@ -13,7 +13,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import dsum, dsum_sql, dsum_str, dsum_str_sql
-from ..io import table
+from ..io import table, tmp_location
 from ..registry import query
 
 
@@ -154,14 +154,9 @@ def q90_stats_agg(spark, sf_dir) -> DataFrame:
     sf0.1: ~3.5s (two full-width scans, r10) -> ~1.1s (fanned memo) —
     the dominant cost was never the scan but the decimal stages running
     on the source parquet's 2 row-group-limited tasks."""
-    import os
-    import tempfile
-
     from ..io import materialize_once, source_stamp
 
-    proj = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
+    proj = tmp_location(
         f"q90proj_{sf_dir.strip('/').replace('/', '_')}"
         f"_{source_stamp(f'{sf_dir}/lineitem.parquet')}",
     )
@@ -971,9 +966,7 @@ def q358_gap_audit_ranged(spark, sf_dir) -> DataFrame:
     movement is the range shuffle, and the fixup is num_partitions
     rows."""
     import atexit
-    import os as _os
     import shutil
-    import tempfile as _tempfile
     import uuid
 
     ids = (
@@ -985,11 +978,7 @@ def q358_gap_audit_ranged(spark, sf_dir) -> DataFrame:
     staged = ids.repartitionByRange(parts, F.col("event_id")).withColumn(
         "__pid", F.spark_partition_id()
     )
-    scratch = _os.path.join(
-        _tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"gaps_{uuid.uuid4().hex[:12]}",
-    )
+    scratch = tmp_location(f"gaps_{uuid.uuid4().hex[:12]}")
     staged.write.parquet(scratch)
     atexit.register(shutil.rmtree, scratch, ignore_errors=True)
     local = spark.read.parquet(scratch)

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .io import tmp_location
+
 
 def asof_join(
     left: DataFrame,
@@ -214,9 +216,7 @@ def global_running_sum(
     scale to integer units first — the same discipline as everywhere
     else in this engine."""
     import atexit
-    import os
     import shutil
-    import tempfile
     import uuid
 
     reserved = {"__pid", "__run", "__base", "__base_cnt"}
@@ -244,9 +244,7 @@ def global_running_sum(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    scratch = os.path.join(
-        tempfile.gettempdir(), "eclypsium_etl_spark", f"prefix_{uuid.uuid4().hex[:12]}"
-    )
+    scratch = tmp_location(f"prefix_{uuid.uuid4().hex[:12]}")
     staged.withColumn("__run", F.sum(value_col).over(w)).write.parquet(scratch)
     atexit.register(shutil.rmtree, scratch, ignore_errors=True)
     local = spark.read.parquet(scratch)
@@ -320,9 +318,7 @@ def global_running_max(
     would otherwise silently drop the NaN from the prefix)."""
     import atexit
     import math
-    import os
     import shutil
-    import tempfile
     import uuid
 
     reserved = {"__pid", "__run", "__base"}
@@ -340,9 +336,7 @@ def global_running_max(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    scratch = os.path.join(
-        tempfile.gettempdir(), "eclypsium_etl_spark", f"runmax_{uuid.uuid4().hex[:12]}"
-    )
+    scratch = tmp_location(f"runmax_{uuid.uuid4().hex[:12]}")
     staged.withColumn("__run", F.max(value_col).over(w)).write.parquet(scratch)
     atexit.register(shutil.rmtree, scratch, ignore_errors=True)
     local = spark.read.parquet(scratch)

@@ -19,11 +19,10 @@ Pipeline shape (exercises q01, q07, q08, q42, q44, q04, q52, q06):
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .io import sink_overwrite, table
+from .io import sink_overwrite, table, tmp_location
 from .registry import query
 
 FLAGSHIP_THRESHOLD = 4_000_000.0
@@ -191,8 +190,6 @@ def q52_shortcircuit_gate(spark, sf_dir) -> DataFrame:
     skip, README.md:57-61): run the gated pipeline once with an
     impossibly-high threshold (gate must close) and once with the real one
     (gate must open), and return both outcomes."""
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
     df = flagship(spark, sf_dir, FLAGSHIP_THRESHOLD)
     # ONE scan answers both gates: the impossible threshold (1e18) is a
     # strict superset predicate of the real one, so its gate count is a
@@ -207,7 +204,7 @@ def q52_shortcircuit_gate(spark, sf_dir) -> DataFrame:
     opened_open = bool(counts.n_open > 0)
     rows_written = 0
     if opened_open:  # the gate: nothing downstream runs when shut
-        sink_overwrite(df, os.path.join(base, "q52_open"))
+        sink_overwrite(df, tmp_location("q52_open"))
         render_report(df)
         rows_written = int(counts.n_open)
     return spark.createDataFrame(

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..registry import query
-from .queries import run_available_now, stream_events
+from .queries import drain_to_memory, run_available_now, stream_events
 
 _ORACLE_Q87 = """
 WITH totals AS (
@@ -31,14 +31,7 @@ def q87_stream_stateful(spark, sf_dir) -> DataFrame:
     from .stateful import running_spend
 
     out = running_spend(stream_events(spark, sf_dir))
-    qname, _ = run_available_now(
-        lambda name, ckpt: out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    return spark.table(qname)
+    return drain_to_memory(out, "update")
 
 
 # DuckDB twin for q113 (used when the query is registered, and by the
@@ -126,14 +119,7 @@ def q113_stream_transform_state(spark, sf_dir) -> DataFrame:
     paths agree wherever both are runnable."""
     if not transform_state_available():
         out = _running_cents_fallback(spark, sf_dir)
-        qname, _ = run_available_now(
-            lambda name, ckpt: out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-        return spark.table(qname)
+        return drain_to_memory(out, "update")
 
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
@@ -184,14 +170,7 @@ def q113_stream_transform_state(spark, sf_dir) -> DataFrame:
                 timeMode="None",
             )
         )
-        qname, _ = run_available_now(
-            lambda name, ckpt: out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-        return spark.table(qname)
+        return drain_to_memory(out, "update")
     finally:
         # restore: later streams must not silently inherit RocksDB
         if prev_provider is None:
@@ -220,7 +199,6 @@ def q118_stream_static_join(spark, sf_dir) -> DataFrame:
     from pyspark.sql import functions as F
 
     from ..io import table
-    from ..operators.queries_stream_helpers import run_stream_to_memory
 
     dim = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"),
@@ -233,7 +211,7 @@ def q118_stream_static_join(spark, sf_dir) -> DataFrame:
         .join(F.broadcast(dim), "user_id")
         .select("event_id", "user_id", "value", "user_name", "segment")
     )
-    return run_stream_to_memory(spark, enriched)
+    return drain_to_memory(enriched)
 
 
 # --------------------------------------- q229: Python streaming source
@@ -384,22 +362,22 @@ def q243_state_reader(spark, sf_dir) -> DataFrame:
     range) is exercised in tests. At 100 TB this reader is also the
     escape hatch for state surgery: read, repair, and seed a new
     checkpoint offline."""
-    from pyspark.sql import functions as F
+    import tempfile
 
-    from .queries import run_available_now, stream_events
+    from pyspark.sql import functions as F
 
     counts = (
         stream_events(spark, sf_dir)
         .groupBy("event_type")
         .agg(F.count("*").alias("n"))
     )
-    _, ckpt = run_available_now(
-        lambda name, c: counts.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", c)
-        .trigger(availableNow=True)
+    # the lazy state read below needs the checkpoint after the drain, so
+    # it is created (and owned) here rather than by run_available_now
+    ckpt = tempfile.mkdtemp(prefix="eclypsium_ckpt_")
+    qname = run_available_now(
+        counts.writeStream.outputMode("complete").format("memory"), ckpt
     )
+    spark.catalog.dropTempView(qname)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.event_type").alias("event_type"),

@@ -27,12 +27,14 @@ import os
 import shutil
 import tempfile
 import threading
+import time
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..functions import dsum, dsum_sql
-from ..io import table
+from ..io import recreate_table, table, tmp_location
 from ..registry import ORACLE, query
 from ..llm.text import _QUALITY_SQL as _TEXT_QUALITY_SQL
 
@@ -155,16 +157,19 @@ def stream_kafka(
 _SHUFFLE_OVERRIDE_LOCK = threading.Lock()
 
 
-def run_available_now(
-    writer_builder, name: str | None = None, ckpt: str | None = None
-) -> tuple[str, str]:
-    """Start a stream with availableNow, block until it drains, return
-    (query_name, checkpoint_dir).
+def run_available_now(writer, ckpt: str | None = None) -> str:
+    """Drain a stream to completion and return its query name.
 
-    ``ckpt``: reuse an existing checkpoint directory instead of a fresh
-    one — the restart-recovery path (a drain that resumes where a
-    previous drain stopped, replaying the one batch whose commit the
-    previous run may not have recorded).
+    ``writer`` is a ``DataStreamWriter`` that already carries its sink
+    and output mode; this function owns the rest of the drain: it sets a
+    fresh query name, the checkpoint location and
+    ``trigger(availableNow=True)``, starts the query, blocks until the
+    finite source is drained and records ``LAST_STATE_METRICS``. A
+    checkpoint created here is deleted when the drain ends. A ``ckpt``
+    passed in belongs to the caller and is left in place — the
+    restart-recovery path (a drain that resumes where a previous drain
+    stopped, replaying the one batch whose commit the previous run may
+    not have recorded) and state reads of the finished checkpoint.
 
     Streaming state partitioning: the number of state-store partitions is
     frozen from ``spark.sql.shuffle.partitions`` when a checkpoint is
@@ -188,19 +193,70 @@ def run_available_now(
     # getActiveSession is thread-local (None on worker threads) — fall
     # back to the instantiated session so harnesses may call from executors
     spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
-    qname = name or f"s_{uuid.uuid4().hex[:12]}"
-    ckpt = ckpt or tempfile.mkdtemp(prefix="eclypsium_ckpt_")
+    qname = f"s_{uuid.uuid4().hex[:12]}"
+    owned = ckpt is None
+    if owned:
+        ckpt = tempfile.mkdtemp(prefix="eclypsium_ckpt_")
     stream_parts = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4")
     with _SHUFFLE_OVERRIDE_LOCK:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", stream_parts)
         try:
-            q = writer_builder(qname, ckpt).start()
+            q = (
+                writer.queryName(qname)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
             q.awaitTermination()
             _record_state_metrics(qname, q)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return qname, ckpt
+            if owned:
+                shutil.rmtree(ckpt, ignore_errors=True)
+    return qname
+
+
+def drain_to_memory(df: DataFrame, mode: str = "append") -> DataFrame:
+    """Drain streaming ``df`` into a memory sink and return its rows.
+
+    The returned DataFrame's plan holds the sink itself, so it keeps
+    collecting the same rows after the sink's temp view is dropped here:
+    the rows live exactly as long as the returned DataFrame, not for the
+    rest of the session."""
+    spark = df.sparkSession
+    qname = run_available_now(df.writeStream.outputMode(mode).format("memory"))
+    out = spark.table(qname)
+    spark.catalog.dropTempView(qname)
+    return out
+
+
+def stage_feed_file(df: DataFrame, src: str, name: str, mtime: float) -> None:
+    """Write ``df`` as the single parquet file ``name`` in feed dir
+    ``src`` with a pinned mtime (the file source processes oldest-first,
+    so the mtime fixes the file's place in the replay)."""
+    staged = os.path.join(src, f"_stage_{name}")
+    df.coalesce(1).write.mode("overwrite").parquet(staged)
+    part = next(f for f in os.listdir(staged) if f.endswith(".parquet"))
+    dst = os.path.join(src, name)
+    os.rename(os.path.join(staged, part), dst)
+    os.utime(dst, (mtime, mtime))
+    shutil.rmtree(staged, ignore_errors=True)
+
+
+@contextmanager
+def staged_feed(waves: list[DataFrame], prefix: str):
+    """A file-replay feed dir holding one parquet file per wave, oldest
+    first by mtime, so a ``maxFilesPerTrigger=1`` stream replays the
+    waves in order. Yields the dir and removes it on exit."""
+    src = tempfile.mkdtemp(prefix=prefix)
+    try:
+        t0 = time.time()
+        for i, wave in enumerate(waves):
+            stage_feed_file(wave, src, f"w{i}.parquet", t0 - 30 * (len(waves) - i))
+        yield src
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
 
 
 # Most recent drained stream's state-store telemetry, keyed by query
@@ -341,14 +397,7 @@ def q56_stream_watermark(spark, sf_dir) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("window.start").alias("w_start"), "event_type", "n")
     )
-    qname, _ = run_available_now(
-        lambda name, ckpt: agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    return spark.table(qname)
+    return drain_to_memory(agg, "complete")
 
 
 @query(
@@ -365,14 +414,7 @@ def q57_stream_dedup_state(spark, sf_dir) -> DataFrame:
     deduped = doubled.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    qname, _ = run_available_now(
-        lambda name, ckpt: deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    return spark.table(qname).select(
+    return drain_to_memory(deduped).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
 
@@ -399,12 +441,7 @@ def q58_stream_foreachbatch(spark, sf_dir) -> DataFrame:
             return
         batch_df.write.mode("append").parquet(out)
 
-    run_available_now(
-        lambda name, ckpt: filtered.writeStream.foreachBatch(sink_batch)
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
+    run_available_now(filtered.writeStream.foreachBatch(sink_batch))
     # the gate means a run can legitimately write NOTHING (every batch
     # empty, or zero batches on an empty feed) — the sink's schema is
     # still defined by the job, so the read-back declares it instead of
@@ -483,14 +520,7 @@ def q137_stream_curation(spark, sf_dir) -> DataFrame:
         .withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark(["norm_hash"])
     )
-    qname, _ = run_available_now(
-        lambda name, ckpt: curated.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    survivors = spark.table(qname).select("norm_hash").distinct()
+    survivors = drain_to_memory(curated).select("norm_hash").distinct()
     from pyspark.sql import Window as W
 
     # NO spread on the batch re-canonicalization side, deliberately
@@ -541,14 +571,7 @@ def q163_stream_update_counts(spark, sf_dir) -> DataFrame:
         F.count("*").alias("n"),
         dsum("value").alias("total_value"),
     )
-    qname, _ = run_available_now(
-        lambda name, ckpt: agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    return spark.table(qname)
+    return drain_to_memory(agg, "update")
 
 
 @query(
@@ -578,14 +601,7 @@ def q187_stream_complete_topk(spark, sf_dir) -> DataFrame:
         .orderBy(F.desc("total_value"), F.asc("user_id"))
         .limit(10)
     )
-    qname, _ = run_available_now(
-        lambda name, ckpt: agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    return spark.table(qname)
+    return drain_to_memory(agg, "complete")
 
 
 @query(
@@ -619,14 +635,7 @@ def q259_stream_append_final(spark, sf_dir) -> DataFrame:
         .agg(F.count("*").alias("n"), dsum("value").alias("val"))
         .select(F.col("window.start").alias("w_start"), "n", "val")
     )
-    qname, _ = run_available_now(
-        lambda name, ckpt: agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    return spark.table(qname)
+    return drain_to_memory(agg)
 
 
 @query(
@@ -662,8 +671,6 @@ def q274_stream_outer_join(spark, sf_dir) -> DataFrame:
     bounds outer-join state on an unbounded stream; without the
     watermark Spark rejects the query outright
     (UnsupportedOperationChecker)."""
-    from ..operators.queries_stream_helpers import run_stream_to_memory
-
     a = (
         stream_events(spark, sf_dir)
         .filter(F.col("event_type") == "view")
@@ -691,7 +698,7 @@ def q274_stream_outer_join(spark, sf_dir) -> DataFrame:
         & (F.col("ts_b") <= F.col("ts_a") + F.expr("INTERVAL 30 MINUTES")),
         "left_outer",
     ).select("eid_a", "eid_b", "user_id")
-    return run_stream_to_memory(spark, joined)
+    return drain_to_memory(joined)
 
 
 @query(
@@ -739,14 +746,7 @@ def q281_stream_chained_windows(spark, sf_dir) -> DataFrame:
         )
         .select(F.col("w15.start").alias("w15_start"), "n_windows", "n_events")
     )
-    qname, _ = run_available_now(
-        lambda name, ckpt: outer.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    return spark.table(qname)
+    return drain_to_memory(outer)
 
 
 @query(
@@ -805,14 +805,7 @@ def q293_stream_session_final(spark, sf_dir) -> DataFrame:
             "val",
         )
     )
-    qname, _ = run_available_now(
-        lambda name, ckpt: agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    return spark.table(qname)
+    return drain_to_memory(agg)
 
 
 @query(
@@ -851,8 +844,6 @@ def q306_stream_full_outer_join(spark, sf_dir) -> DataFrame:
     predicate; getting either wrong leaks premature NULLs or drops
     matches, and the hash catches both. State on an unbounded stream
     stays bounded by exactly these horizons."""
-    from ..operators.queries_stream_helpers import run_stream_to_memory
-
     a = (
         stream_events(spark, sf_dir)
         .filter(F.col("event_type") == "view")
@@ -884,7 +875,7 @@ def q306_stream_full_outer_join(spark, sf_dir) -> DataFrame:
         "eid_b",
         F.coalesce("user_a", "user_b").alias("user_id"),
     )
-    return run_stream_to_memory(spark, joined)
+    return drain_to_memory(joined)
 
 
 @query(
@@ -928,8 +919,6 @@ def q320_stream_join_asym_watermark(spark, sf_dir) -> DataFrame:
     ts + 30min < global watermark; matched pairs emit always; views
     still coverable at end-of-stream must not leak — row count and
     hash catch either failure."""
-    from ..operators.queries_stream_helpers import run_stream_to_memory
-
     a = (
         stream_events(spark, sf_dir)
         .filter(F.col("event_type") == "view")
@@ -957,7 +946,7 @@ def q320_stream_join_asym_watermark(spark, sf_dir) -> DataFrame:
         & (F.col("ts_b") <= F.col("ts_a") + F.expr("INTERVAL 30 MINUTES")),
         "left_outer",
     ).select("eid_a", "eid_b", "user_id")
-    return run_stream_to_memory(spark, joined)
+    return drain_to_memory(joined)
 
 
 @query(
@@ -1000,14 +989,7 @@ def q321_stream_dedup_business_key(spark, sf_dir) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "h"])
         .select("user_id", "h")
     )
-    qname, _ = run_available_now(
-        lambda name, ckpt: deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    return spark.table(qname)
+    return drain_to_memory(deduped)
 
 
 @query(
@@ -1072,21 +1054,17 @@ def q342_stream_corpus_dedup(spark, sf_dir) -> DataFrame:
     side), batches broadcast against it under AQE, and appends are
     file-granular (no rewrite of history) — ingest cost is
     O(batch × log index), never a rescan of the corpus."""
-    import shutil
-    import time
-
     tname = "t_q342_index"
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
-    loc = os.path.join(base, f"{tname}_tbl_{os.path.basename(sf_dir)}")
-    shutil.rmtree(loc, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {tname}")
-    spark.sql(
+    loc = tmp_location(f"{tname}_tbl_{os.path.basename(sf_dir)}")
+    recreate_table(
+        spark,
+        tname,
+        loc,
         f"""
         CREATE TABLE {tname} (
             doc_id BIGINT, digest STRING, wave INT
         ) USING parquet LOCATION '{loc}'
-        """
+        """,
     )
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
     k = F.col("doc_id")
@@ -1100,29 +1078,14 @@ def q342_stream_corpus_dedup(spark, sf_dir) -> DataFrame:
             (k + 10_000_000).alias("doc_id"), "text"
         )
     )
-    src = tempfile.mkdtemp(prefix="eclypsium_ingest_feed_")
-    t0 = time.time()
-    for i, wave in enumerate((wave0, wave1)):
-        staged = os.path.join(src, f"_stage_w{i}")
-        wave.withColumn("wave", F.lit(i)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staged)
-        part = next(f for f in os.listdir(staged) if f.endswith(".parquet"))
-        dst = os.path.join(src, f"w{i}.parquet")
-        os.rename(os.path.join(staged, part), dst)
-        os.utime(dst, (t0 - 60 + 30 * i, t0 - 60 + 30 * i))
-
-    feed = spark.readStream.schema(
-        "doc_id bigint, text string, wave int"
-    ).option("maxFilesPerTrigger", 1).parquet(src)
-    run_available_now(
-        lambda name, ckpt: feed.writeStream.foreachBatch(
-            corpus_ingest_handler(spark, tname)
+    waves = [w.withColumn("wave", F.lit(i)) for i, w in enumerate((wave0, wave1))]
+    with staged_feed(waves, "eclypsium_ingest_feed_") as src:
+        feed = spark.readStream.schema(
+            "doc_id bigint, text string, wave int"
+        ).option("maxFilesPerTrigger", 1).parquet(src)
+        run_available_now(
+            feed.writeStream.foreachBatch(corpus_ingest_handler(spark, tname))
         )
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
     spark.catalog.refreshTable(tname)
     return spark.table(tname)
 
@@ -1181,18 +1144,17 @@ def retractable_mv_create(spark, tname: str, loc: str) -> None:
     decimal-exact sum) AND the group's applied-sequence high watermark
     (`last_seq`), partitioned by a bounded key hash (`pt`) so a
     micro-batch's merge rewrites ONLY the partitions it touches."""
-    import shutil
-
-    shutil.rmtree(loc, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {tname}")
-    spark.sql(
+    recreate_table(
+        spark,
+        tname,
+        loc,
         f"""
         CREATE TABLE {tname} (
             o_custkey BIGINT, n_orders BIGINT, total_dec DECIMAL(28,4),
             nn BIGINT, last_seq INT, pt INT
         ) USING parquet PARTITIONED BY (pt)
         OPTIONS (partitionOverwriteMode 'dynamic') LOCATION '{loc}'
-        """
+        """,
     )
 
 
@@ -1356,7 +1318,9 @@ def retractable_mv_waves(spark, sf_dir) -> list[DataFrame]:
     ]
 
 
-def retractable_mv_drain(spark, tname: str, src: str, ckpt: str | None = None):
+def retractable_mv_drain(
+    spark, tname: str, src: str, ckpt: str | None = None
+) -> None:
     """Drain the delta-wave feed at ``src`` into the MV table through
     the retractable merge; reusing ``ckpt`` is the restart path."""
     feed = (
@@ -1364,14 +1328,8 @@ def retractable_mv_drain(spark, tname: str, src: str, ckpt: str | None = None):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    return run_available_now(
-        lambda name, c: feed.writeStream.foreachBatch(
-            retractable_mv_handler(spark, tname)
-        )
-        .queryName(name)
-        .option("checkpointLocation", c)
-        .trigger(availableNow=True),
-        ckpt=ckpt,
+    run_available_now(
+        feed.writeStream.foreachBatch(retractable_mv_handler(spark, tname)), ckpt
     )
 
 
@@ -1437,37 +1395,17 @@ def q351_stream_retractable_mv(spark, sf_dir) -> DataFrame:
     with the fixture basename (like its LOCATION already was), so
     concurrent sessions on different fixtures no longer clobber each
     other's MV."""
-    import shutil
-    import time
-
     from ..io import fixture_suffix
 
     # Sanitizing the basename alone can alias distinct fixtures ('sf0.1'
     # and 'sf0_1' both sanitize to 'sf0_1' — ADVICE r12); fixture_suffix
     # adds a hash of the RAW basename so name AND location stay unique.
     tname = f"t_q351_mv_{fixture_suffix(sf_dir)}"
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
-    loc = os.path.join(base, f"{tname}_tbl")
-    retractable_mv_create(spark, tname, loc)
+    retractable_mv_create(spark, tname, tmp_location(f"{tname}_tbl"))
 
-    src = tempfile.mkdtemp(prefix="eclypsium_mv_feed_")
-    t0 = time.time()
-    for i, wave in enumerate(retractable_mv_waves(spark, sf_dir)):
-        staged = os.path.join(src, f"_stage_w{i}")
-        wave.coalesce(1).write.mode("overwrite").parquet(staged)
-        part = next(f for f in os.listdir(staged) if f.endswith(".parquet"))
-        dst = os.path.join(src, f"w{i}.parquet")
-        os.rename(os.path.join(staged, part), dst)
-        os.utime(dst, (t0 - 120 + 30 * i, t0 - 120 + 30 * i))
-        shutil.rmtree(staged, ignore_errors=True)
-
-    try:
+    waves = retractable_mv_waves(spark, sf_dir)
+    with staged_feed(waves, "eclypsium_mv_feed_") as src:
         retractable_mv_drain(spark, tname, src)
-    finally:
-        # the feed dir is consumed by the drain; leaving it leaked one
-        # mkdtemp per run (ADVICE r11)
-        shutil.rmtree(src, ignore_errors=True)
     spark.catalog.refreshTable(tname)
     return spark.table(tname).select(
         "o_custkey",
@@ -1619,13 +1557,10 @@ def q354_stream_gated_watermark(spark, sf_dir) -> DataFrame:
     exactly once through dropDuplicatesWithinWatermark. Time-ordered
     waves keep cross-batch disorder at zero, so the 10-minute delay is
     about intra-batch jitter, not history span."""
-    import time as _time
-
     # a 20% slice (event_id % 5 = 0, mirrored in the oracle): the
     # demonstration needs multi-batch watermark state, not the whole
     # fixture's — dedup state over the full 1M-row sf0.1 feed put this
     # query at 52s in the registry sweep for no additional evidence
-    src = tempfile.mkdtemp(prefix="eclypsium_gated_feed_")
     e = (
         table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 5 == 0)
@@ -1683,56 +1618,38 @@ def q354_stream_gated_watermark(spark, sf_dir) -> DataFrame:
         poison(1_000_000_001, "2199-06-01 00:00:00", 0)
     ).unionByName(poison(1_000_000_002, "1969-12-31 23:59:59", 1))
 
-    t0 = _time.time()
     # pin the wave-tagged frame ONCE, in parallel, before the per-wave
     # coalesce(1) writes: coalesce propagates upstream, so each unpinned
     # wave write re-runs the whole scan+gate+union in ONE task (measured
     # 3.8s × 3 waves at sf0.1 from exactly that collapse — the same
     # single-task trap the 44s r11 trim fixed); pinned, each wave write
     # is a trivial one-task read of a 1/3 slice
-    pre = os.path.join(src, "_pre")
-    feed_df.write.parquet(pre)
-    feed_pinned = spark.read.parquet(pre)
-    for i in range(3):
-        stage = os.path.join(src, f"_stage_w{i}")
-        feed_pinned.filter(F.col("__wave") == i).drop("__wave").coalesce(
-            1
-        ).write.mode("overwrite").parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        dst = os.path.join(src, f"w{i}.parquet")
-        os.rename(os.path.join(stage, part), dst)
-        os.utime(dst, (t0 - 90 + 30 * i, t0 - 90 + 30 * i))
-
-    feed = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string,"
-            " value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    gated = feed.filter(
-        (F.col("ts") > F.lit(_ET_LO).cast("timestamp"))
-        & (F.col("ts") < F.lit(_ET_HI).cast("timestamp"))
-    )
-    deduped = gated.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    try:
-        qname, _ = run_available_now(
-            lambda name, ckpt: deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-    finally:
-        # the staged feed is fully drained into the memory sink; leaving
-        # it leaked one mkdtemp per run (the q351 ADVICE r11 lesson)
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table(qname).select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
+    with tempfile.TemporaryDirectory(prefix="eclypsium_gated_pre_") as pre:
+        feed_df.write.mode("overwrite").parquet(pre)
+        feed_pinned = spark.read.parquet(pre)
+        waves = [
+            feed_pinned.filter(F.col("__wave") == i).drop("__wave")
+            for i in range(3)
+        ]
+        with staged_feed(waves, "eclypsium_gated_feed_") as src:
+            feed = (
+                spark.readStream.schema(
+                    "event_id long, ts timestamp, user_id long, event_type string,"
+                    " value double"
+                )
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+            )
+            gated = feed.filter(
+                (F.col("ts") > F.lit(_ET_LO).cast("timestamp"))
+                & (F.col("ts") < F.lit(_ET_HI).cast("timestamp"))
+            )
+            deduped = gated.withWatermark(
+                "ts", "10 minutes"
+            ).dropDuplicatesWithinWatermark(["event_id"])
+            return drain_to_memory(deduped).select(
+                "event_id", "ts", "user_id", "event_type", "value"
+            )
 
 
 # ---- q362: streaming incremental RAG index maintenance --------------------
@@ -1753,8 +1670,6 @@ def rag_index_tables(spark, sf_dir: str) -> tuple[str, str]:
     from ..io import fixture_suffix
 
     suf = fixture_suffix(sf_dir)
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
     tpost, tpool = f"t_q362_post_{suf}", f"t_q362_pool_{suf}"
     for tname, ddl in (
         (
@@ -1764,13 +1679,14 @@ def rag_index_tables(spark, sf_dir: str) -> tuple[str, str]:
         ),
         (tpool, "doc BIGINT, vec ARRAY<DOUBLE>"),
     ):
-        loc = os.path.join(base, f"{tname}_tbl")
-        shutil.rmtree(loc, ignore_errors=True)
-        spark.sql(f"DROP TABLE IF EXISTS {tname}")
+        loc = tmp_location(f"{tname}_tbl")
         part = "PARTITIONED BY (shard)" if tname == tpost else ""
-        spark.sql(
+        recreate_table(
+            spark,
+            tname,
+            loc,
             f"CREATE TABLE {tname} ({ddl}) USING parquet {part} "
-            f"LOCATION '{loc}'"
+            f"LOCATION '{loc}'",
         )
     return tpost, tpool
 
@@ -1838,35 +1754,12 @@ def rag_index_handler(spark, tpost: str, tpool: str, sf_dir: str):
     return ingest
 
 
-def wave_feed(df: DataFrame, key_col: str, n_waves: int, prefix: str) -> str:
-    """Stage ANY keyed relation as an n_waves-file arrival feed
-    (key mod wave, explicit mtimes pinning oldest-first file-source
-    order — the q342/q351 replay discipline). Returns the feed dir;
-    caller removes it after the stream drains."""
-    import time
-
-    src = tempfile.mkdtemp(prefix=prefix)
-    t0 = time.time()
-    for i in range(n_waves):
-        wave = df.filter(F.col(key_col) % n_waves == i)
-        staged = os.path.join(src, f"_stage_w{i}")
-        wave.coalesce(1).write.mode("overwrite").parquet(staged)
-        part = next(f for f in os.listdir(staged) if f.endswith(".parquet"))
-        dst = os.path.join(src, f"w{i}.parquet")
-        os.rename(os.path.join(staged, part), dst)
-        os.utime(dst, (t0 - 120 + 30 * i, t0 - 120 + 30 * i))
-        shutil.rmtree(staged, ignore_errors=True)
-    return src
-
-
-def rag_index_feed(spark, sf_dir: str) -> str:
-    """q362's feed: the document corpus as a _RAG_WAVES-file arrival
-    sequence (doc_id mod wave)."""
-    return wave_feed(
-        table(spark, sf_dir, "documents").select("doc_id", "text"),
-        "doc_id",
-        _RAG_WAVES,
-        "eclypsium_ragidx_feed_",
+def wave_feed(df: DataFrame, key_col: str, n_waves: int, prefix: str):
+    """Stage ANY keyed relation as an n_waves-file arrival feed (key mod
+    wave, in wave order — the q342/q351 replay discipline): a
+    ``staged_feed`` context that yields the feed dir."""
+    return staged_feed(
+        [df.filter(F.col(key_col) % n_waves == i) for i in range(n_waves)], prefix
     )
 
 
@@ -1910,23 +1803,18 @@ def q362_stream_rag_index(spark, sf_dir) -> DataFrame:
     what the q344 hot-shard rebalance and q352's bounded token-key
     join both start from."""
     tpost, tpool = rag_index_tables(spark, sf_dir)
-    src = rag_index_feed(spark, sf_dir)
-    feed = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    try:
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    with wave_feed(docs, "doc_id", _RAG_WAVES, "eclypsium_ragidx_feed_") as src:
+        feed = (
+            spark.readStream.schema("doc_id bigint, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
         run_available_now(
-            lambda name, ckpt: feed.writeStream.foreachBatch(
+            feed.writeStream.foreachBatch(
                 rag_index_handler(spark, tpost, tpool, sf_dir)
             )
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
         )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
     spark.catalog.refreshTable(tpost)
     spark.catalog.refreshTable(tpool)
 
@@ -1952,17 +1840,15 @@ def ivf_ingest_table(spark, sf_dir: str) -> str:
     Fixture-suffix naming per the q351/q362 anti-aliasing rule."""
     from ..io import fixture_suffix
 
-    suf = fixture_suffix(sf_dir)
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
-    tasg = f"t_q365_asg_{suf}"
-    loc = os.path.join(base, f"{tasg}_tbl")
-    shutil.rmtree(loc, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {tasg}")
-    spark.sql(
+    tasg = f"t_q365_asg_{fixture_suffix(sf_dir)}"
+    loc = tmp_location(f"{tasg}_tbl")
+    recreate_table(
+        spark,
+        tasg,
+        loc,
         f"CREATE TABLE {tasg} (vec_id BIGINT, embedding ARRAY<FLOAT>, "
         f"cent_id BIGINT) USING parquet PARTITIONED BY (cent_id) "
-        f"LOCATION '{loc}'"
+        f"LOCATION '{loc}'",
     )
     return tasg
 
@@ -2031,28 +1917,16 @@ def q365_stream_ivf_ingest(spark, sf_dir) -> DataFrame:
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_emb")
     )
     tasg = ivf_ingest_table(spark, sf_dir)
-    src = wave_feed(
-        em.select("vec_id", "embedding"),
-        "vec_id",
-        3,
-        "eclypsium_ivfing_feed_",
-    )
-    feed = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    try:
-        run_available_now(
-            lambda name, ckpt: feed.writeStream.foreachBatch(
-                ivf_ingest_handler(spark, tasg, cents)
-            )
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
+    vecs = em.select("vec_id", "embedding")
+    with wave_feed(vecs, "vec_id", 3, "eclypsium_ivfing_feed_") as src:
+        feed = (
+            spark.readStream.schema("vec_id bigint, embedding array<float>")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
         )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        run_available_now(
+            feed.writeStream.foreachBatch(ivf_ingest_handler(spark, tasg, cents))
+        )
     spark.catalog.refreshTable(tasg)
 
     from ..llm.similarity import ivf_cell_topk

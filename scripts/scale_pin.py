@@ -70,11 +70,16 @@ def ensure_fixture() -> str:
     out = fixture_dir()
     if not os.path.exists(f"{out}/_BUILT"):
         build_fixture(out)
-    for tbl, key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
+    keys = (("lineitem", "l_orderkey"), ("orders", "o_orderkey"))
+    # ONE span for both tables, so shard k's lineitems still join its orders
+    span = 1 + max(
+        int(pd.read_parquet(f"{SF01}/{tbl}.parquet", columns=[key])[key].max())
+        for tbl, key in keys
+    )
+    for tbl, key in keys:
         path = f"{out}/{tbl}.parquet"
         if not os.path.exists(path):
             df = pd.read_parquet(f"{SF01}/{tbl}.parquet")
-            span = int(df[key].max()) + 1
             parts = [df]
             for k in range(1, N_SHARDS):
                 d = df.copy()

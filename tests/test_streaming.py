@@ -11,6 +11,8 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
+from eclypsium_etl_spark.streaming.queries import stage_feed_file
+
 
 def _t(s: str) -> datetime:
     return datetime.fromisoformat(f"2024-01-01 {s}")
@@ -241,6 +243,70 @@ def test_state_metrics_recorded_on_drain(spark):
     assert m["peak_state_bytes"] > 0
 
 
+def test_drains_leave_no_residue(spark):
+    """A drain cleans up after itself: rerunning the memory-sink (q57),
+    foreachBatch (q342, q329) and caller-checkpointed (q332) streams
+    leaves no checkpoint or feed dir in the temp dir, no extra catalog
+    entry and no changed session conf — while every returned DataFrame
+    collects its rows after the call returns. q243's state read is lazy,
+    so its caller-owned checkpoint is the one entry allowed to stay."""
+    import tempfile
+    from collections import Counter
+
+    from eclypsium_etl_spark import registry
+
+    from .conftest import SF_SMOKE
+
+    Q, _ = registry.load_all()
+    names = [
+        "q57_stream_dedup_state",
+        "q342_stream_corpus_dedup",
+        "q329_stream_scd2",
+        "q332_stream_kmeans",
+    ]
+    provider = "spark.sql.streaming.stateStore.providerClass"
+
+    def temp_entries():
+        return {
+            e
+            for e in os.listdir(tempfile.gettempdir())
+            if e.startswith("eclypsium_ckpt_")
+            or (e.startswith("eclypsium_") and "_feed_" in e)
+        }
+
+    def catalog():
+        return {(t.name, t.isTemporary) for t in spark.catalog.listTables()}
+
+    def conf():
+        return (
+            spark.conf.get("spark.sql.shuffle.partitions"),
+            spark.conf.get(provider, None),
+        )
+
+    def rows(df):
+        return Counter(map(tuple, df.collect()))
+
+    tmp0, conf0 = temp_entries(), conf()
+    first = {n: Q[n](spark, SF_SMOKE) for n in names}
+    want = {n: rows(df) for n, df in first.items()}
+    tables1 = catalog()
+    second = {n: Q[n](spark, SF_SMOKE) for n in names}
+    assert catalog() <= tables1
+    for n in names:
+        assert want[n], n
+        assert rows(second[n]) == want[n], n
+    # the memory sink lives as long as the DataFrame, not its temp view
+    q57 = "q57_stream_dedup_state"
+    assert rows(first[q57]) == want[q57]
+    assert temp_entries() == tmp0
+
+    state = Q["q243_state_reader"](spark, SF_SMOKE)
+    assert rows(state)
+    left = temp_entries() - tmp0
+    assert len(left) <= 1 and all(e.startswith("eclypsium_ckpt_") for e in left)
+    assert conf() == conf0
+
+
 def test_dedup_within_watermark_reemits_after_horizon(spark, tmp_path):
     """q321's declared boundary, exercised (SURVEY round-9 forward-plan
     item 3): dropDuplicatesWithinWatermark only guarantees dedup WITHIN
@@ -337,22 +403,6 @@ def test_dedup_within_watermark_reemits_after_horizon(spark, tmp_path):
 # must equal a clean, uncrashed run's.
 
 
-def _stage_feed_file(df, src: str, name: str, mtime: float) -> None:
-    """Write df as one parquet file `name` in feed dir `src` with a
-    pinned mtime (the file source processes oldest-first)."""
-    import os
-    import shutil
-    import tempfile
-
-    staged = tempfile.mkdtemp(prefix="eclypsium_pin_stage_")
-    df.coalesce(1).write.mode("overwrite").parquet(staged)
-    part = next(f for f in os.listdir(staged) if f.endswith(".parquet"))
-    dst = os.path.join(src, name)
-    os.rename(os.path.join(staged, part), dst)
-    os.utime(dst, (mtime, mtime))
-    shutil.rmtree(staged, ignore_errors=True)
-
-
 def _simulate_commit_loss(ckpt: str, batch_id: int = 0) -> None:
     """Crash window: offsets/N written (batch ran) but commits/N never
     recorded — the restart replays batch N. Hadoop's local FS keeps a
@@ -395,8 +445,8 @@ def test_restart_replay_stream_kmeans_exactly_once(spark, tmp_path):
     # clean reference: both batches, no crash
     src_ref = str(tmp_path / "feed_ref")
     os.makedirs(src_ref)
-    _stage_feed_file(em.filter(F.col("vec_id") % 2 == 0), src_ref, "b0.parquet", t0 - 60)
-    _stage_feed_file(em.filter(F.col("vec_id") % 2 == 1), src_ref, "b1.parquet", t0 - 30)
+    stage_feed_file(em.filter(F.col("vec_id") % 2 == 0), src_ref, "b0.parquet", t0 - 60)
+    stage_feed_file(em.filter(F.col("vec_id") % 2 == 1), src_ref, "b1.parquet", t0 - 30)
     ckpt_ref = str(tmp_path / "ckpt_ref")
     os.makedirs(ckpt_ref)
     cents_ref = stream_kmeans_fold(spark, src_ref, init, ckpt_ref)
@@ -404,12 +454,12 @@ def test_restart_replay_stream_kmeans_exactly_once(spark, tmp_path):
     # crashed run: drain b0, lose its commit, add b1, restart
     src = str(tmp_path / "feed")
     os.makedirs(src)
-    _stage_feed_file(em.filter(F.col("vec_id") % 2 == 0), src, "b0.parquet", t0 - 60)
+    stage_feed_file(em.filter(F.col("vec_id") % 2 == 0), src, "b0.parquet", t0 - 60)
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(ckpt)
     stream_kmeans_fold(spark, src, init, ckpt)
     _simulate_commit_loss(ckpt)
-    _stage_feed_file(em.filter(F.col("vec_id") % 2 == 1), src, "b1.parquet", t0 - 30)
+    stage_feed_file(em.filter(F.col("vec_id") % 2 == 1), src, "b1.parquet", t0 - 30)
     cents = stream_kmeans_fold(spark, src, init, ckpt)  # fresh handler
 
     assert cents == cents_ref
@@ -423,9 +473,7 @@ def test_restart_replay_corpus_dedup_idempotent(spark, tmp_path):
     """q342's ingest across a driver restart: the replayed batch's
     anti-join re-rejects everything the pre-crash append admitted, so
     the index holds each digest exactly once and matches the clean run."""
-    import tempfile
-
-    from eclypsium_etl_spark.io import table
+    from eclypsium_etl_spark.io import recreate_table, table, tmp_location
     from eclypsium_etl_spark.streaming.queries import (
         corpus_ingest_handler,
         run_available_now,
@@ -439,16 +487,13 @@ def test_restart_replay_corpus_dedup_idempotent(spark, tmp_path):
     t0 = time.time()
 
     def mk_table(tname):
-        base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-        os.makedirs(base, exist_ok=True)
-        loc = os.path.join(base, f"{tname}_tbl_pin")
-        import shutil
-
-        shutil.rmtree(loc, ignore_errors=True)
-        spark.sql(f"DROP TABLE IF EXISTS {tname}")
-        spark.sql(
+        loc = tmp_location(f"{tname}_tbl_pin")
+        recreate_table(
+            spark,
+            tname,
+            loc,
             f"CREATE TABLE {tname} (doc_id BIGINT, digest STRING, wave INT)"
-            f" USING parquet LOCATION '{loc}'"
+            f" USING parquet LOCATION '{loc}'",
         )
 
     def drain(src, ckpt, tname):
@@ -458,13 +503,8 @@ def test_restart_replay_corpus_dedup_idempotent(spark, tmp_path):
             .parquet(src)
         )
         run_available_now(
-            lambda name, c: feed.writeStream.foreachBatch(
-                corpus_ingest_handler(spark, tname)
-            )
-            .queryName(name)
-            .option("checkpointLocation", c)
-            .trigger(availableNow=True),
-            ckpt=ckpt,
+            feed.writeStream.foreachBatch(corpus_ingest_handler(spark, tname)),
+            ckpt,
         )
         spark.catalog.refreshTable(tname)
 
@@ -472,8 +512,8 @@ def test_restart_replay_corpus_dedup_idempotent(spark, tmp_path):
     mk_table("t_pin_dedup_ref")
     src_ref = str(tmp_path / "feed_ref")
     os.makedirs(src_ref)
-    _stage_feed_file(w0, src_ref, "w0.parquet", t0 - 60)
-    _stage_feed_file(w1, src_ref, "w1.parquet", t0 - 30)
+    stage_feed_file(w0, src_ref, "w0.parquet", t0 - 60)
+    stage_feed_file(w1, src_ref, "w1.parquet", t0 - 30)
     ckpt_ref = str(tmp_path / "ckpt_ref")
     os.makedirs(ckpt_ref)
     drain(src_ref, ckpt_ref, "t_pin_dedup_ref")
@@ -486,12 +526,12 @@ def test_restart_replay_corpus_dedup_idempotent(spark, tmp_path):
     mk_table("t_pin_dedup")
     src = str(tmp_path / "feed")
     os.makedirs(src)
-    _stage_feed_file(w0, src, "w0.parquet", t0 - 60)
+    stage_feed_file(w0, src, "w0.parquet", t0 - 60)
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(ckpt)
     drain(src, ckpt, "t_pin_dedup")
     _simulate_commit_loss(ckpt)
-    _stage_feed_file(w1, src, "w1.parquet", t0 - 30)
+    stage_feed_file(w1, src, "w1.parquet", t0 - 30)
     drain(src, ckpt, "t_pin_dedup")  # fresh handler = fresh applied set
 
     got = sorted(
@@ -539,13 +579,8 @@ def test_restart_replay_stream_scd2_noop_merge(spark, tmp_path):
             .parquet(src)
         )
         run_available_now(
-            lambda name, ck: feed.writeStream.foreachBatch(
-                scd2_wave_handler(spark, tname, "pin")
-            )
-            .queryName(name)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True),
-            ckpt=ckpt,
+            feed.writeStream.foreachBatch(scd2_wave_handler(spark, tname, "pin")),
+            ckpt,
         )
 
     # clean reference
@@ -553,7 +588,7 @@ def test_restart_replay_stream_scd2_noop_merge(spark, tmp_path):
     src_ref = str(tmp_path / "feed_ref")
     os.makedirs(src_ref)
     for i, (eff, wave) in enumerate(waves):
-        _stage_feed_file(
+        stage_feed_file(
             wave.withColumn("eff", F.lit(eff)),
             src_ref,
             f"w{i}.parquet",
@@ -570,7 +605,7 @@ def test_restart_replay_stream_scd2_noop_merge(spark, tmp_path):
     _scd2_create_init(spark, SF_SMOKE, "t_pin_scd2")
     src = str(tmp_path / "feed")
     os.makedirs(src)
-    _stage_feed_file(
+    stage_feed_file(
         waves[0][1].withColumn("eff", F.lit(waves[0][0])),
         src,
         "w0.parquet",
@@ -580,7 +615,7 @@ def test_restart_replay_stream_scd2_noop_merge(spark, tmp_path):
     os.makedirs(ckpt)
     drain(src, ckpt, "t_pin_scd2")
     _simulate_commit_loss(ckpt)
-    _stage_feed_file(
+    stage_feed_file(
         waves[1][1].withColumn("eff", F.lit(waves[1][0])),
         src,
         "w1.parquet",
@@ -626,7 +661,7 @@ def test_restart_replay_retractable_mv_exactly_once(spark, tmp_path):
     src_ref = str(tmp_path / "mv_feed_ref")
     os.makedirs(src_ref)
     for i, w in enumerate(waves):
-        _stage_feed_file(w, src_ref, f"w{i}.parquet", t0 - 120 + 10 * i)
+        stage_feed_file(w, src_ref, f"w{i}.parquet", t0 - 120 + 10 * i)
     retractable_mv_create(spark, "t_q351_pin_ref", str(tmp_path / "mv_ref"))
     retractable_mv_drain(spark, "t_q351_pin_ref", src_ref)
     ref = final_rows("t_q351_pin_ref")
@@ -637,12 +672,14 @@ def test_restart_replay_retractable_mv_exactly_once(spark, tmp_path):
     src = str(tmp_path / "mv_feed")
     os.makedirs(src)
     for i in (0, 1):
-        _stage_feed_file(waves[i], src, f"w{i}.parquet", t0 - 120 + 10 * i)
+        stage_feed_file(waves[i], src, f"w{i}.parquet", t0 - 120 + 10 * i)
     retractable_mv_create(spark, "t_q351_pin", str(tmp_path / "mv_crash"))
-    _, ckpt = retractable_mv_drain(spark, "t_q351_pin", src)
+    ckpt = str(tmp_path / "mv_ckpt")
+    os.makedirs(ckpt)
+    retractable_mv_drain(spark, "t_q351_pin", src, ckpt=ckpt)
     _simulate_commit_loss(ckpt, 1)
     for i in (2, 3):
-        _stage_feed_file(waves[i], src, f"w{i}.parquet", t0 - 120 + 10 * i)
+        stage_feed_file(waves[i], src, f"w{i}.parquet", t0 - 120 + 10 * i)
     retractable_mv_drain(spark, "t_q351_pin", src, ckpt=ckpt)
 
     assert final_rows("t_q351_pin") == ref
@@ -657,9 +694,8 @@ def test_restart_replay_rag_index_per_side_idempotent(spark):
     per side; two plain parquet tables have no cross-table
     transaction)."""
     import shutil
-    import tempfile
 
-    from eclypsium_etl_spark.io import table
+    from eclypsium_etl_spark.io import table, tmp_location
     from eclypsium_etl_spark.streaming.queries import (
         rag_index_handler,
         rag_index_tables,
@@ -689,9 +725,7 @@ def test_restart_replay_rag_index_per_side_idempotent(spark):
 
     # (2) crash between appends: postings landed, pool lost — wipe the
     # pool table's files on disk and replay the batch
-    pool_loc = os.path.join(
-        tempfile.gettempdir(), "eclypsium_etl_spark", f"{tpool}_tbl"
-    )
+    pool_loc = tmp_location(f"{tpool}_tbl")
     shutil.rmtree(pool_loc)
     os.makedirs(pool_loc)
     spark.catalog.refreshTable(tpool)

@@ -269,7 +269,10 @@ def test_watermark_poisoning_demonstrated_and_gated(spark, tmp_path):
 
     from pyspark.sql import functions as SF
 
-    from eclypsium_etl_spark.streaming.queries import run_available_now
+    from eclypsium_etl_spark.streaming.queries import (
+        drain_to_memory,
+        stage_feed_file,
+    )
 
     t0 = _time.time()
 
@@ -294,11 +297,7 @@ def test_watermark_poisoning_demonstrated_and_gated(spark, tmp_path):
         ("b1.parquet", rows([4, 5, 6], 3), t0 - 60),
         ("b2.parquet", rows([7, 8, 9], 6), t0 - 30),
     ):
-        staged = str(tmp_path / f"_stage_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(staged)
-        part = next(f for f in os.listdir(staged) if f.endswith(".parquet"))
-        os.rename(os.path.join(staged, part), os.path.join(src, name))
-        os.utime(os.path.join(src, name), (mt, mt))
+        stage_feed_file(df, src, name, mt)
 
     def drain(gate: bool) -> set[int]:
         feed = (
@@ -313,14 +312,7 @@ def test_watermark_poisoning_demonstrated_and_gated(spark, tmp_path):
         dedup = feed.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
             ["event_id"]
         )
-        qname, _ = run_available_now(
-            lambda name, ckpt: dedup.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-        return {r["event_id"] for r in spark.table(qname).collect()}
+        return {r["event_id"] for r in drain_to_memory(dedup).collect()}
 
     ungated = drain(gate=False)
     gated = drain(gate=True)
