@@ -841,7 +841,7 @@ def q124_bloom_decontaminate(spark, sf_dir) -> DataFrame:
     rows, broadcast-join the bit set, and a probe survives only with k
     matches; everything else is per-doc rollup. Shared kernel: the same
     memoized shingle table as q63/q71/q115 (scan-only under the
-    harness). Eval split mirrors q115: doc_id < {_DECON_EVAL_MAX} is the
+    harness). Eval split mirrors q115: doc_id < 20 is the
     stand-in eval set."""
     sh = shingles(spark, sf_dir)
     probes = F.array(
@@ -1110,7 +1110,7 @@ def q202_minhash_merge(spark, sf_dir) -> DataFrame:
     Bloom (q124). The md5 hash family makes every signature component
     engine-exact, so even the ESTIMATE is differentially checked —
     sketch parity, not just bounds. Shuffles carry (source, j, min-hash)
-    triples: sources × {_MH_K} rows."""
+    triples: sources × 16 rows."""
     d = table(spark, sf_dir, "documents")
     v = (
         d.select("source", F.explode(F.split("text", " ")).alias("token"))

@@ -382,7 +382,7 @@ def _pca_iter_duck(k: int, prev_v: str) -> str:
 )
 def q162_pca_power(spark, sf_dir) -> DataFrame:
     """Top principal component of the embedding corpus by power iteration
-    ({_PCA_ITERS} fixed iterations from the deterministic uniform start) —
+    (3 fixed iterations from the deterministic uniform start) —
     the whitening/centering primitive an embedding pipeline runs before
     quantization (q121) or IVF cell training (q72). Like q156's TextRank,
     an ITERATIVE linear-algebra algorithm with an exact differential
@@ -406,7 +406,7 @@ def q162_pca_power(spark, sf_dir) -> DataFrame:
     broadcast side (the r13 unrolled shape re-planned and re-evaluated
     every earlier iteration per step — exchange reuse is runtime-lucky
     under AQE, not guaranteed). The projected corpus is
-    localCheckpoint'ed ONCE and re-read by all {_PCA_ITERS} passes —
+    localCheckpoint'ed ONCE and re-read by all 3 passes —
     the standard persist-the-input discipline of iterative ML (MLlib
     does exactly this), paid fresh inside every invocation, never
     shared across runs. localCheckpoint (executor-local, not
@@ -576,7 +576,7 @@ def q166_length_buckets(spark, sf_dir) -> DataFrame:
     max length — the quantity that decides training/inference batch
     geometry (uniform batching pads everything to the global max; small
     buckets trade scheduling slots for pad FLOPs). Scan-stage length
-    projection + one tiny aggregate keyed by ≤ max_len/{_LB_WIDTH}
+    projection + one tiny aggregate keyed by ≤ max_len/32
     buckets; integer arithmetic throughout."""
     d = table(spark, sf_dir, "documents").select(
         n_tok_col_long().alias("n_tok")

@@ -56,15 +56,8 @@ def q64_sim_knn(spark, sf_dir) -> DataFrame:
     q = em.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    c = em.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    sim = dot(F.col("q_emb"), F.col("embedding"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim_raw"), F.asc("neighbor_id"))
-    return (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", sim.alias("sim_raw"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .select("query_id", "neighbor_id", F.round("sim_raw", 6).alias("sim"))
+    return exact_topk(em, q, _TOP_K).select(
+        "query_id", "neighbor_id", F.round("sim_raw", 6).alias("sim")
     )
 
 
@@ -241,29 +234,100 @@ def ivf_cell_topk(assigned: DataFrame, top_k: int = 3) -> DataFrame:
     streaming-maintained assignment table (q365) searches with exactly
     the batch spelling — the query half of the incremental == rebuild
     equivalence."""
-    queries = assigned.filter(
+    queries = _ivf_queries(assigned, F.col("cent_id").alias("q_cent"))
+    cands = assigned.join(
+        F.broadcast(queries),
+        (F.col("cent_id") == F.col("q_cent"))
+        & (F.col("vec_id") != F.col("query_id")),
+    ).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
+    )
+    return topk(cands, F.desc("sim_raw"), top_k).select(
+        "query_id", "neighbor_id", F.round("sim_raw", 6).alias("sim")
+    )
+
+
+# ---- the candidate -> verify kernel of the IVF/PQ family ----------------
+# Every approximate query below is two stages: CANDIDATE generation (rank
+# cells, probe them, score with the query's own scorer) and VERIFICATION
+# (per-query top-k, then recall against the exact brute-force top-k). The
+# stages live here once; each query states only its scorer and how it
+# reports recall.
+
+
+def _ivf_queries(frame: DataFrame, *cols) -> DataFrame:
+    """The standard IVF query set: vectors 100..104 of ``frame`` as
+    (query_id, q_emb, *cols)."""
+    return frame.filter(
         (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
     ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("cent_id").alias("q_cent"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"), *cols
     )
-    w_rank = Window.partitionBy("query_id").orderBy(F.desc("sim_raw"), F.asc("neighbor_id"))
+
+
+def topk(cands: DataFrame, order, k: int, by=("query_id",)) -> DataFrame:
+    """The first ``k`` rows of each ``by`` group by ``order``, ties broken
+    by neighbor_id ASC (the total order every oracle states): one
+    row_number window, so ranking is per-partition window heads."""
+    w = Window.partitionBy(*by).orderBy(order, F.asc("neighbor_id"))
     return (
-        assigned.join(
-            F.broadcast(queries),
-            (F.col("cent_id") == F.col("q_cent"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
+        cands.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+    )
+
+
+def rank_cells(queries: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """Each query's ``nprobe`` nearest cells as (query_id, q_emb, cent_id,
+    rn), ranked by (c_sim DESC, cent_id ASC): a k-row broadcast crossJoin
+    and a per-query window over k rows (kilobytes)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("c_sim"), F.asc("cent_id"))
+    return (
+        queries.crossJoin(F.broadcast(cents))
         .select(
             "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
+            "q_emb",
+            "cent_id",
+            dot(F.col("q_emb"), F.col("cent_emb")).alias("c_sim"),
         )
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= top_k)
-        .select("query_id", "neighbor_id", F.round("sim_raw", 6).alias("sim"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= nprobe)
+        .select("query_id", "q_emb", "cent_id", "rn")
     )
+
+
+def exact_topk(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """The exact brute-force top-k (query_id, neighbor_id, sim_raw) of the
+    (query_id, q_emb) ``queries`` over every other ``corpus`` vector: the
+    query set broadcasts, the corpus never shuffles."""
+    cands = corpus.join(
+        F.broadcast(queries.select("query_id", "q_emb")),
+        F.col("vec_id") != F.col("query_id"),
+    ).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
+    )
+    return topk(cands, F.desc("sim_raw"), k)
+
+
+def hit_counts(approx: DataFrame, exact: DataFrame, by) -> DataFrame:
+    """(*by, n_hit): how many ``approx`` rows are in the ``exact`` top-k,
+    per ``by`` group; groups with no hit emit no row (callers left-join)."""
+    return (
+        approx.join(exact, ["query_id", "neighbor_id"], "semi")
+        .groupBy(*by)
+        .agg(F.count("*").alias("n_hit"))
+    )
+
+
+def _recall(k: int):
+    """The in-result recall@k column over a left-joined n_hit."""
+    return F.round(
+        F.coalesce(F.col("n_hit"), F.lit(0)) / float(k), 6
+    ).alias("recall")
 
 
 _IVF_ITERS = 3   # q319: Lloyd iterations for the trained coarse quantizer
@@ -364,6 +428,38 @@ def _kmeans_oracle_ctes(
     return ",\n    ".join(parts)
 
 
+def _exact_cte(
+    k: int, corpus: str = "embeddings", queries: str = "queries", on: str = ""
+) -> str:
+    """The oracles' ``exact`` CTE: each query's brute-force top-k over
+    every other ``corpus`` vector (``on``: an extra join predicate), by
+    (dot DESC, vec_id) — the DuckDB twin of exact_topk."""
+    return f"""exact AS (
+        SELECT query_id, neighbor_id FROM (
+            SELECT q.query_id, c.vec_id AS neighbor_id,
+                   row_number() OVER (
+                       PARTITION BY q.query_id
+                       ORDER BY {dot_sql('q.q_emb', 'c.embedding')} DESC,
+                                c.vec_id
+                   ) AS rn
+            FROM {queries} q JOIN {corpus} c ON c.vec_id <> q.query_id{on}
+        ) WHERE rn <= {k}
+    )"""
+
+
+def _matched_cte(rel: str) -> str:
+    """The oracles' ``matched`` CTE: per query, how many of ``rel``'s
+    top-k rows are in ``exact`` — the DuckDB twin of hit_counts. ``rel``
+    is aliased by its initial (ivf/ivfpq -> i, pq -> p)."""
+    a = rel[0]
+    return f"""matched AS (
+        SELECT {a}.query_id, COUNT(*) AS n_hit
+        FROM {rel} {a} JOIN exact e
+          ON e.query_id = {a}.query_id AND e.neighbor_id = {a}.neighbor_id
+        GROUP BY {a}.query_id
+    )"""
+
+
 @query(
     "q319_ivf_trained",
     oracle=f"""
@@ -386,23 +482,8 @@ def _kmeans_oracle_ctes(
               ON a.cent_id = q.q_cent AND a.vec_id <> q.query_id
         ) WHERE rn <= {_IVF_TOP_K}
     ),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {dot_sql('q.q_emb', 'c.embedding')} DESC,
-                                c.vec_id
-                   ) AS rn
-            FROM queries q JOIN embeddings c ON c.vec_id <> q.query_id
-        ) WHERE rn <= {_IVF_TOP_K}
-    ),
-    matched AS (
-        SELECT i.query_id, COUNT(*) AS n_hit
-        FROM ivf i JOIN exact e
-          ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
-        GROUP BY i.query_id
-    )
+    {_exact_cte(_IVF_TOP_K)},
+    {_matched_cte('ivf')}
     SELECT i.query_id, i.neighbor_id, round(i.sim_raw, 6) + 0.0 AS sim,
            round(COALESCE(m.n_hit, 0) / {float(_IVF_TOP_K)}, 6) AS recall
     FROM ivf i LEFT JOIN matched m ON m.query_id = i.query_id
@@ -418,8 +499,8 @@ def q319_ivf_trained(spark, sf_dir) -> DataFrame:
     q72's shape: the query probes only its own trained cell.
 
     The result carries its own quality metric in-band (q287's meta-eval
-    discipline): per query, recall@{_IVF_TOP_K} against the EXACT
-    brute-force top-{_IVF_TOP_K} over the full corpus — so a centroid
+    discipline): per query, recall@3 against the EXACT
+    brute-force top-3 over the full corpus — so a centroid
     regression shows up as a recall drop in the hashed result, not just
     a silent ranking change. (On THIS fixture recall reads low by
     construction: the embeddings are near-orthogonal noise, so a
@@ -450,61 +531,13 @@ def _ivf_search_with_recall(spark, sf_dir, asg: DataFrame) -> DataFrame:
     brute-force top-k — the shared evaluate stage of q319 (full-corpus
     training) and q327 (sample training); ``asg`` is any (vec_id,
     embedding, cent_id) assignment frame."""
-    queries = asg.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("cent_id").alias("q_cent"),
+    ivf = ivf_cell_topk(asg, _IVF_TOP_K)
+    exact = exact_topk(
+        table(spark, sf_dir, "embeddings"), _ivf_queries(asg), _IVF_TOP_K
     )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_raw"), F.asc("neighbor_id")
-    )
-    ivf = (
-        asg.join(
-            F.broadcast(queries),
-            (F.col("cent_id") == F.col("q_cent"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
-        )
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= _IVF_TOP_K)
-        .drop("rn")
-    )
-    em = table(spark, sf_dir, "embeddings")
-    exact = (
-        em.join(
-            F.broadcast(queries.select("query_id", "q_emb")),
-            F.col("vec_id") != F.col("query_id"),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
-        )
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= _IVF_TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    matched = (
-        ivf.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return (
-        ivf.join(matched, "query_id", "left")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("sim_raw", 6).alias("sim"),
-            F.round(
-                F.coalesce(F.col("n_hit"), F.lit(0)) / float(_IVF_TOP_K), 6
-            ).alias("recall"),
-        )
+    hits = hit_counts(ivf, exact, ("query_id",))
+    return ivf.join(hits, "query_id", "left").select(
+        "query_id", "neighbor_id", "sim", _recall(_IVF_TOP_K)
     )
 
 
@@ -533,23 +566,8 @@ _IVF_TRAIN_PRED = "vec_id % 4 = 0"  # q327: the training sample (25%)
               ON a.cent_id = q.q_cent AND a.vec_id <> q.query_id
         ) WHERE rn <= {_IVF_TOP_K}
     ),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {dot_sql('q.q_emb', 'c.embedding')} DESC,
-                                c.vec_id
-                   ) AS rn
-            FROM queries q JOIN embeddings c ON c.vec_id <> q.query_id
-        ) WHERE rn <= {_IVF_TOP_K}
-    ),
-    matched AS (
-        SELECT i.query_id, COUNT(*) AS n_hit
-        FROM ivf i JOIN exact e
-          ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
-        GROUP BY i.query_id
-    )
+    {_exact_cte(_IVF_TOP_K)},
+    {_matched_cte('ivf')}
     SELECT i.query_id, i.neighbor_id, round(i.sim_raw, 6) + 0.0 AS sim,
            round(COALESCE(m.n_hit, 0) / {float(_IVF_TOP_K)}, 6) AS recall
     FROM ivf i LEFT JOIN matched m ON m.query_id = i.query_id
@@ -558,7 +576,7 @@ _IVF_TRAIN_PRED = "vec_id % 4 = 0"  # q327: the training sample (25%)
 def q327_ivf_sample_trained(spark, sf_dir) -> DataFrame:
     """SAMPLE-TRAINED IVF — the 100 TB training shape made concrete
     (SURVEY round-9 forward-plan item 1, built early): the Lloyd loop
-    iterates over a deterministic 25% subset ({_IVF_TRAIN_PRED} — the
+    iterates over a deterministic 25% subset (vec_id % 4 = 0 — the
     q114 hash-bucket discipline; at scale this is the sampled training
     table), and the full corpus is touched EXACTLY ONCE, by the final
     broadcast-argmax assignment. Init is the first k of the SUBSET in
@@ -620,23 +638,8 @@ _IVF_PROBES = 2  # q323: cells probed per query (q319 probes 1)
               ON a.cent_id = p.cent_id AND a.vec_id <> p.query_id
         ) WHERE rn <= {_IVF_TOP_K}
     ),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {dot_sql('q.q_emb', 'c.embedding')} DESC,
-                                c.vec_id
-                   ) AS rn
-            FROM queries q JOIN embeddings c ON c.vec_id <> q.query_id
-        ) WHERE rn <= {_IVF_TOP_K}
-    ),
-    matched AS (
-        SELECT i.query_id, COUNT(*) AS n_hit
-        FROM ivf i JOIN exact e
-          ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
-        GROUP BY i.query_id
-    )
+    {_exact_cte(_IVF_TOP_K)},
+    {_matched_cte('ivf')}
     SELECT i.query_id, i.neighbor_id, round(i.sim_raw, 6) + 0.0 AS sim,
            round(COALESCE(m.n_hit, 0) / {float(_IVF_TOP_K)}, 6) AS recall
     FROM ivf i LEFT JOIN matched m ON m.query_id = i.query_id
@@ -644,14 +647,14 @@ _IVF_PROBES = 2  # q323: cells probed per query (q319 probes 1)
 )
 def q323_ivf_multiprobe(spark, sf_dir) -> DataFrame:
     """MULTI-PROBE trained IVF — the recall knob on q319: each query
-    searches its {_IVF_PROBES} nearest trained cells instead of one.
+    searches its 2 nearest trained cells instead of one.
     Probing is the standard IVF accuracy/cost dial (nprobe in
     FAISS-style indexes): candidates scale ~linearly with the probe
     count while recall climbs toward exact — and because this engine
-    carries recall@{_IVF_TOP_K} IN the result (q319's meta-eval
+    carries recall@3 IN the result (q319's meta-eval
     discipline, same exact-top-k yardstick), the lift is itself
     oracle-checked data: on this fixture the expected single-probe
-    recall is ≈ 1/k and {_IVF_PROBES} probes ≈ {_IVF_PROBES}/k — the
+    recall is ≈ 1/k and 2 probes ≈ 2/k — the
     dial measurably works even on a noise corpus, which is exactly what
     a curation pipeline needs to SIZE nprobe instead of guessing.
 
@@ -665,74 +668,26 @@ def q323_ivf_multiprobe(spark, sf_dir) -> DataFrame:
     from .clustering import kmeans_fit
 
     asg, cents = kmeans_fit(spark, sf_dir, k=_N_CENTROIDS, iterations=_IVF_ITERS)
-    queries = table(spark, sf_dir, "embeddings").filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    w_cell = Window.partitionBy("query_id").orderBy(
-        F.desc("c_sim"), F.asc("cent_id")
-    )
-    probed = (
-        queries.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "q_emb",
-            "cent_id",
-            dot(F.col("q_emb"), F.col("cent_emb")).alias("c_sim"),
-        )
-        .withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") <= _IVF_PROBES)
-        .select("query_id", "q_emb", "cent_id")
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_raw"), F.asc("neighbor_id")
-    )
-    ivf = (
-        asg.join(
-            F.broadcast(probed),
-            ["cent_id"],
-        )
+    em = table(spark, sf_dir, "embeddings")
+    queries = _ivf_queries(em)
+    probed = rank_cells(queries, cents, _IVF_PROBES)
+    cands = (
+        asg.join(F.broadcast(probed), ["cent_id"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
         )
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= _IVF_TOP_K)
-        .drop("rn")
     )
-    em = table(spark, sf_dir, "embeddings")
-    exact = (
-        em.join(
-            F.broadcast(queries),
-            F.col("vec_id") != F.col("query_id"),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
-        )
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= _IVF_TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    matched = (
-        ivf.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return (
-        ivf.join(matched, "query_id", "left")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("sim_raw", 6).alias("sim"),
-            F.round(
-                F.coalesce(F.col("n_hit"), F.lit(0)) / float(_IVF_TOP_K), 6
-            ).alias("recall"),
-        )
+    ivf = topk(cands, F.desc("sim_raw"), _IVF_TOP_K)
+    exact = exact_topk(em, queries, _IVF_TOP_K)
+    hits = hit_counts(ivf, exact, ("query_id",))
+    return ivf.join(hits, "query_id", "left").select(
+        "query_id",
+        "neighbor_id",
+        F.round("sim_raw", 6).alias("sim"),
+        _recall(_IVF_TOP_K),
     )
 
 
@@ -785,24 +740,8 @@ _FILTER_LABEL = 2  # q339: the metadata predicate pushed into the cell scan
              AND a.label = {_FILTER_LABEL}
         ) WHERE rn <= {_IVF_TOP_K}
     ),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {dot_sql('q.q_emb', 'c.embedding')} DESC,
-                                c.vec_id
-                   ) AS rn
-            FROM queries q JOIN embeddings c
-              ON c.vec_id <> q.query_id AND c.label = {_FILTER_LABEL}
-        ) WHERE rn <= {_IVF_TOP_K}
-    ),
-    matched AS (
-        SELECT i.query_id, COUNT(*) AS n_hit
-        FROM ivf i JOIN exact e
-          ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
-        GROUP BY i.query_id
-    )
+    {_exact_cte(_IVF_TOP_K, on=f' AND c.label = {_FILTER_LABEL}')},
+    {_matched_cte('ivf')}
     SELECT i.query_id, i.neighbor_id, round(i.sim_raw, 6) + 0.0 AS sim,
            round(COALESCE(m.n_hit, 0) / {float(_IVF_TOP_K)}, 6) AS recall,
            s.probe_selectivity
@@ -814,15 +753,15 @@ _FILTER_LABEL = 2  # q339: the metadata predicate pushed into the cell scan
 def q339_ivf_filtered(spark, sf_dir) -> DataFrame:
     """FILTERED ANN — metadata-predicate pushdown INTO the cell scan
     (VERDICT r8 #8, the vector-DB production shape): the query asks for
-    nearest neighbors AMONG rows satisfying label = {_FILTER_LABEL},
+    nearest neighbors AMONG rows satisfying label = 2,
     and the predicate is applied to the probed cells' members BEFORE
     the rerank, never to a post-hoc truncation of an unfiltered top-k
     (post-filtering silently returns < k or misses qualifying
     neighbors just outside the unfiltered top-k — the classic filtered-
-    ANN bug). Probing is q323's nprobe={_IVF_PROBES} shape over the
+    ANN bug). Probing is q323's nprobe=2 shape over the
     SHARED trained model (clustering.kmeans_fit memo), ground truth is
-    the exact brute force over the FILTERED corpus, and recall@
-    {_IVF_TOP_K} rides in-result as always.
+    the exact brute force over the FILTERED corpus, and recall@3
+    rides in-result as always.
 
     PER-PROBE PREDICATE SELECTIVITY is measured in-result
     (probe_selectivity = qualifying candidates / probed candidates):
@@ -846,26 +785,8 @@ def q339_ivf_filtered(spark, sf_dir) -> DataFrame:
     )
     em = table(spark, sf_dir, "embeddings")
     asg_l = asg.join(em.select("vec_id", "label"), "vec_id")
-    queries = em.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    w_cell = Window.partitionBy("query_id").orderBy(
-        F.desc("c_sim"), F.asc("cent_id")
-    )
-    probed = (
-        queries.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "q_emb",
-            "cent_id",
-            dot(F.col("q_emb"), F.col("cent_emb")).alias("c_sim"),
-        )
-        .withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") <= _IVF_PROBES)
-        .select("query_id", "q_emb", "cent_id")
-    )
+    queries = _ivf_queries(em)
+    probed = rank_cells(queries, cents, _IVF_PROBES)
     cand = asg_l.join(F.broadcast(probed), ["cent_id"]).filter(
         F.col("vec_id") != F.col("query_id")
     )
@@ -878,49 +799,26 @@ def q339_ivf_filtered(spark, sf_dir) -> DataFrame:
             6,
         ).alias("probe_selectivity")
     )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_raw"), F.asc("neighbor_id")
-    )
-    ivf = (
-        cand.filter(F.col("label") == _FILTER_LABEL)
-        .select(
+    ivf = topk(
+        cand.filter(F.col("label") == _FILTER_LABEL).select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
-        )
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= _IVF_TOP_K)
-        .drop("rn")
+        ),
+        F.desc("sim_raw"),
+        _IVF_TOP_K,
     )
-    exact = (
-        em.filter(F.col("label") == _FILTER_LABEL)
-        .join(
-            F.broadcast(queries), F.col("vec_id") != F.col("query_id")
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
-        )
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= _IVF_TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    matched = (
-        ivf.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
+    exact = exact_topk(
+        em.filter(F.col("label") == _FILTER_LABEL), queries, _IVF_TOP_K
     )
     return (
-        ivf.join(matched, "query_id", "left")
+        ivf.join(hit_counts(ivf, exact, ("query_id",)), "query_id", "left")
         .join(sel, "query_id")
         .select(
             "query_id",
             "neighbor_id",
             F.round("sim_raw", 6).alias("sim"),
-            F.round(
-                F.coalesce(F.col("n_hit"), F.lit(0)) / float(_IVF_TOP_K), 6
-            ).alias("recall"),
+            _recall(_IVF_TOP_K),
             "probe_selectivity",
         )
     )
@@ -991,17 +889,7 @@ def _probed_cte(p: int) -> str:
         FROM embeddings WHERE vec_id >= 100 AND vec_id < 105
     ),
     {", ".join(_probed_cte(p) for p in _LADDER_PROBES)},
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {dot_sql('q.q_emb', 'c.embedding')} DESC,
-                                c.vec_id
-                   ) AS rn
-            FROM queries q JOIN embeddings c ON c.vec_id <> q.query_id
-        ) WHERE rn <= {_IVF_TOP_K}
-    )
+    {_exact_cte(_IVF_TOP_K)}
     {" UNION ALL ".join(_probe_rung_sql(p) for p in _LADDER_PROBES)}
     """,
 )
@@ -1009,7 +897,7 @@ def q325_ivf_probe_ladder(spark, sf_dir) -> DataFrame:
     """The IVF PROBE LADDER — the nprobe recall/cost CURVE as one
     oracle-checked result (SURVEY round-9 forward-plan item 2, built
     early; q292's calibration-curve discipline applied to ANN): for
-    nprobe ∈ {_LADDER_PROBES}, total exact-top-{_IVF_TOP_K} hits
+    nprobe ∈ (1, 2, 4), total exact-top-3 hits
     (as recall) and total candidates scanned across the query set.
     This is the table an operator actually tunes from — recall climbs
     with probes while candidates grow ~linearly, and both columns are
@@ -1027,44 +915,13 @@ def q325_ivf_probe_ladder(spark, sf_dir) -> DataFrame:
     from .clustering import kmeans_fit
 
     asg, cents = kmeans_fit(spark, sf_dir, k=_N_CENTROIDS, iterations=_IVF_ITERS)
-    queries = table(spark, sf_dir, "embeddings").filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
     em = table(spark, sf_dir, "embeddings")
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_raw"), F.asc("neighbor_id")
-    )
-    exact = (
-        em.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
-        )
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= _IVF_TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    w_cell = Window.partitionBy("query_id").orderBy(
-        F.desc("c_sim"), F.asc("cent_id")
-    )
-    ranked_cells = (
-        queries.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "q_emb",
-            "cent_id",
-            dot(F.col("q_emb"), F.col("cent_emb")).alias("c_sim"),
-        )
-        .withColumn("cell_rn", F.row_number().over(w_cell))
-    )
+    queries = _ivf_queries(em)
+    exact = exact_topk(em, queries, _IVF_TOP_K)
+    ranked_cells = rank_cells(queries, cents, max(_LADDER_PROBES))
 
     def rung(p: int) -> DataFrame:
-        probed = ranked_cells.filter(F.col("cell_rn") <= p).select(
-            "query_id", "q_emb", "cent_id"
-        )
+        probed = ranked_cells.filter(F.col("rn") <= p)
         cand = (
             asg.join(F.broadcast(probed), ["cent_id"])
             .filter(F.col("vec_id") != F.col("query_id"))
@@ -1074,15 +931,10 @@ def q325_ivf_probe_ladder(spark, sf_dir) -> DataFrame:
                 dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
             )
         )
-        topk = (
-            cand.withColumn("rn", F.row_number().over(w_rank))
-            .filter(F.col("rn") <= _IVF_TOP_K)
-            .select("query_id", "neighbor_id")
-        )
-        hits = topk.join(exact, ["query_id", "neighbor_id"], "semi")
+        hits = hit_counts(topk(cand, F.desc("sim_raw"), _IVF_TOP_K), exact, ())
         return (
             cand.agg(F.count("*").cast("long").alias("candidates"))
-            .crossJoin(hits.agg(F.count("*").alias("n_hit")))
+            .crossJoin(hits)
             .select(
                 F.lit(p).alias("nprobe"),
                 F.round(
@@ -1268,25 +1120,19 @@ def q130_sim_quantized_topk(spark, sf_dir) -> DataFrame:
     queries = em.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_raw"), F.asc("neighbor_id")
+    cands = corpus.join(
+        F.broadcast(queries), F.col("neighbor_id") != F.col("query_id")
+    ).select(
+        "query_id",
+        "neighbor_id",
+        (F.col("scale") * dot(F.col("q"), F.col("q_emb"))).alias("approx_raw"),
+        dot(F.col("embedding"), F.col("q_emb")).alias("exact_raw"),
     )
-    return (
-        corpus.join(F.broadcast(queries), F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.col("scale") * dot(F.col("q"), F.col("q_emb"))).alias("approx_raw"),
-            dot(F.col("embedding"), F.col("q_emb")).alias("exact_raw"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _PQ_TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("approx_raw", 6).alias("approx_sim"),
-            F.round("exact_raw", 6).alias("exact_sim"),
-        )
+    return topk(cands, F.desc("approx_raw"), _PQ_TOP_K).select(
+        "query_id",
+        "neighbor_id",
+        F.round("approx_raw", 6).alias("approx_sim"),
+        F.round("exact_raw", 6).alias("exact_sim"),
     )
 
 
@@ -1365,7 +1211,7 @@ _POOL_DEC = "DECIMAL(38,20)"
 )
 def q178_embedding_pool(spark, sf_dir) -> DataFrame:
     """Chunk→document embedding pooling (mean): chunk vectors grouped by
-    parent doc (vec_id div {_POOL_CHUNKS} stands in for the chunker's
+    parent doc (vec_id div 4 stands in for the chunker's
     doc_id), averaged per dimension through decimal sums, reassembled
     into an ordered array — the aggregation every RAG/retrieval index
     runs between q138's chunker and q64's search. One exchange keyed on
@@ -1435,21 +1281,17 @@ def q179_hard_negatives(spark, sf_dir) -> DataFrame:
     q = em.filter(F.col("vec_id") < _HN_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    c = em.select(F.col("vec_id").alias("neg_id"), "embedding")
+    c = em.select(F.col("vec_id").alias("neighbor_id"), "embedding")
     sim = dot(F.col("q_emb"), F.col("embedding"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_raw"), F.asc("neg_id")
-    )
-    return (
-        c.join(
-            F.broadcast(q),
-            (F.col("neg_id") / _POOL_CHUNKS).cast("long")
-            != (F.col("query_id") / _POOL_CHUNKS).cast("long"),
-        )
-        .select("query_id", "neg_id", sim.alias("sim_raw"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _HN_K)
-        .select("query_id", "neg_id", F.round("sim_raw", 6).alias("sim"))
+    cands = c.join(
+        F.broadcast(q),
+        (F.col("neighbor_id") / _POOL_CHUNKS).cast("long")
+        != (F.col("query_id") / _POOL_CHUNKS).cast("long"),
+    ).select("query_id", "neighbor_id", sim.alias("sim_raw"))
+    return topk(cands, F.desc("sim_raw"), _HN_K).select(
+        "query_id",
+        F.col("neighbor_id").alias("neg_id"),
+        F.round("sim_raw", 6).alias("sim"),
     )
 
 
@@ -1490,23 +1332,8 @@ def q179_hard_negatives(spark, sf_dir) -> DataFrame:
               ON c.cent_id = qu.q_cent AND c.vec_id <> qu.query_id
         ) WHERE rn <= {_IVF_TOP_K}
     ),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {dot_sql('q.q_emb', 'c.embedding')} DESC,
-                                c.vec_id
-                   ) AS rn
-            FROM queries q JOIN embeddings c ON c.vec_id <> q.query_id
-        ) WHERE rn <= {_IVF_TOP_K}
-    ),
-    matched AS (
-        SELECT i.query_id, COUNT(*) AS n_hit
-        FROM ivf i JOIN exact e
-          ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
-        GROUP BY i.query_id
-    )
+    {_exact_cte(_IVF_TOP_K)},
+    {_matched_cte('ivf')}
     SELECT i.query_id, i.neighbor_id,
            round(i.approx_raw, 6) + 0.0 AS approx_sim,
            round(i.exact_raw, 6) + 0.0 AS exact_sim,
@@ -1524,7 +1351,7 @@ def q328_ivf_adc(spark, sf_dir) -> DataFrame:
     codebook — same storage/bandwidth lever, simpler codebook). Both
     error sources of a real IVF-PQ index are measured IN-RESULT: the
     exact float score rides along per emitted neighbor (quantization
-    error), and recall@{_IVF_TOP_K} vs the exact full-corpus top-k
+    error), and recall@3 vs the exact full-corpus top-k
     rides per query (cell-restriction error, compounded by code
     ranking). Training, quantization, cell-scoped ADC ranking, and the
     recall join are all replicated closed-form by the DuckDB oracle —
@@ -1545,65 +1372,31 @@ def q328_ivf_adc(spark, sf_dir) -> DataFrame:
     corpus = asg.withColumn("scale", F.expr(_QSCALE_EXPR)).withColumn(
         "q", F.expr(_QARR_EXPR)
     )
-    queries = asg.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("cent_id").alias("q_cent"),
-    )
-    w_approx = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_raw"), F.asc("neighbor_id")
-    )
-    ivf = (
+    queries = _ivf_queries(asg, F.col("cent_id").alias("q_cent"))
+    ivf = topk(
         corpus.join(
             F.broadcast(queries),
             (F.col("cent_id") == F.col("q_cent"))
             & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
+        ).select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             (F.col("scale") * dot(F.col("q"), F.col("q_emb"))).alias(
                 "approx_raw"
             ),
             dot(F.col("embedding"), F.col("q_emb")).alias("exact_raw"),
-        )
-        .withColumn("rn", F.row_number().over(w_approx))
-        .filter(F.col("rn") <= _IVF_TOP_K)
-        .drop("rn")
+        ),
+        F.desc("approx_raw"),
+        _IVF_TOP_K,
     )
-    em = table(spark, sf_dir, "embeddings")
-    w_exact = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_raw"), F.asc("neighbor_id")
-    )
-    exact = (
-        em.join(
-            F.broadcast(queries.select("query_id", "q_emb")),
-            F.col("vec_id") != F.col("query_id"),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
-        )
-        .withColumn("rn", F.row_number().over(w_exact))
-        .filter(F.col("rn") <= _IVF_TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    matched = (
-        ivf.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return ivf.join(matched, "query_id", "left").select(
+    exact = exact_topk(table(spark, sf_dir, "embeddings"), queries, _IVF_TOP_K)
+    hits = hit_counts(ivf, exact, ("query_id",))
+    return ivf.join(hits, "query_id", "left").select(
         "query_id",
         "neighbor_id",
         F.round("approx_raw", 6).alias("approx_sim"),
         F.round("exact_raw", 6).alias("exact_sim"),
-        F.round(
-            F.coalesce(F.col("n_hit"), F.lit(0)) / float(_IVF_TOP_K), 6
-        ).alias("recall"),
+        _recall(_IVF_TOP_K),
     )
 
 
@@ -1730,6 +1523,28 @@ def _pq_best_expr(
     )
 
 
+def _pq_codebooks(spark, sf_dir, src: DataFrame, col: str) -> list[DataFrame]:
+    """Train one k-means codebook per _PQ_SUBS slice of ``src[col]`` and
+    fold each to a 1-row array column __cb0 / __cb1 (sorted by cent_id)
+    that crossJoin-broadcasts into the encode scan."""
+    from .clustering import kmeans_fit
+
+    folded = []
+    for i, (st, ln) in enumerate(_PQ_SUBS):
+        sub = src.select("vec_id", F.slice(col, st, ln).alias("embedding"))
+        _, cents = kmeans_fit(
+            spark, sf_dir, k=_PQ_CB_K, iterations=_IVF_ITERS, source=sub
+        )
+        folded.append(
+            cents.agg(
+                F.array_sort(
+                    F.collect_list(F.struct("cent_id", "cent_emb"))
+                ).alias(f"__cb{i}")
+            )
+        )
+    return folded
+
+
 @query(
     "q331_pq_adc",
     oracle=f"""
@@ -1775,23 +1590,8 @@ def _pq_best_expr(
             FROM codes c JOIN queries qu ON c.vec_id <> qu.query_id
         ) WHERE rn <= {_PQ_TOP_K}
     ),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {dot_sql('q.q_emb', 'c.embedding')} DESC,
-                                c.vec_id
-                   ) AS rn
-            FROM queries q JOIN embeddings c ON c.vec_id <> q.query_id
-        ) WHERE rn <= {_PQ_TOP_K}
-    ),
-    matched AS (
-        SELECT p.query_id, COUNT(*) AS n_hit
-        FROM pq p JOIN exact e
-          ON e.query_id = p.query_id AND e.neighbor_id = p.neighbor_id
-        GROUP BY p.query_id
-    )
+    {_exact_cte(_PQ_TOP_K)},
+    {_matched_cte('pq')}
     SELECT p.query_id, p.neighbor_id, p.code1, p.code2,
            round(p.approx_raw, 6) + 0.0 AS approx_sim,
            round(p.exact_raw, 6) + 0.0 AS exact_sim,
@@ -1803,7 +1603,7 @@ def q331_pq_adc(spark, sf_dir) -> DataFrame:
     """PRODUCT QUANTIZATION with REAL per-subspace codebooks (SURVEY
     round-9 item 1; Jégou et al. 2011 proper, upgrading q328's scalar
     stand-in): the 64-d embedding splits into {len(_PQ_SUBS)} × 32-d
-    subvectors, an independent k-means codebook (k={_PQ_CB_K}, the
+    subvectors, an independent k-means codebook (k=8, the
     shared unrolled-Lloyd oracle chain per subspace via src_rel/prefix)
     trains on each slice, every vector encodes as its per-subspace
     nearest-centroid ids — {len(_PQ_SUBS)} small ints replacing 64
@@ -1813,7 +1613,7 @@ def q331_pq_adc(spark, sf_dir) -> DataFrame:
 
     Everything is hashed data: the codes themselves (code1/code2 — a
     wrong codebook or tiebreak shows up directly), the approx and
-    exact scores per emitted neighbor, and recall@{_PQ_TOP_K} vs the
+    exact scores per emitted neighbor, and recall@5 vs the
     exact float top-k per query. Both training chains, both encodes,
     the ADC ranking and the recall join replicate closed-form in
     DuckDB — a differentially-tested PQ index end to end.
@@ -1826,27 +1626,10 @@ def q331_pq_adc(spark, sf_dir) -> DataFrame:
     assembles the code table (the naive per-subspace-assignment join
     would shuffle the corpus on vec_id once per subspace). Queries
     broadcast; ranking is per-partition window heads."""
-    from .clustering import kmeans_fit
-
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    folded = []
-    for i, (st, ln) in enumerate(_PQ_SUBS):
-        sub = em.select(
-            "vec_id", F.slice("embedding", st, ln).alias("embedding")
-        )
-        _, cents = kmeans_fit(
-            spark, sf_dir, k=_PQ_CB_K, iterations=_IVF_ITERS, source=sub
-        )
-        folded.append(
-            cents.agg(
-                F.array_sort(
-                    F.collect_list(F.struct("cent_id", "cent_emb"))
-                ).alias(f"__cb{i}")
-            )
-        )
     corpus = em
-    for f in folded:
-        corpus = corpus.crossJoin(F.broadcast(f))
+    for cb in _pq_codebooks(spark, sf_dir, em, "embedding"):
+        corpus = corpus.crossJoin(F.broadcast(cb))
     corpus = corpus.select(
         "vec_id",
         "embedding",
@@ -1859,10 +1642,7 @@ def q331_pq_adc(spark, sf_dir) -> DataFrame:
         F.slice("embedding", *_PQ_SUBS[0]).alias("q1"),
         F.slice("embedding", *_PQ_SUBS[1]).alias("q2"),
     )
-    w_approx = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_raw"), F.asc("neighbor_id")
-    )
-    pq = (
+    cands = (
         corpus.join(
             F.broadcast(queries), F.col("vec_id") != F.col("query_id")
         )
@@ -1877,42 +1657,18 @@ def q331_pq_adc(spark, sf_dir) -> DataFrame:
             ).alias("approx_raw"),
             dot(F.col("embedding"), F.col("q_emb")).alias("exact_raw"),
         )
-        .withColumn("rn", F.row_number().over(w_approx))
-        .filter(F.col("rn") <= _PQ_TOP_K)
-        .drop("rn")
     )
-    w_exact = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_raw"), F.asc("neighbor_id")
-    )
-    exact = (
-        em.join(
-            F.broadcast(queries.select("query_id", "q_emb")),
-            F.col("vec_id") != F.col("query_id"),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
-        )
-        .withColumn("rn", F.row_number().over(w_exact))
-        .filter(F.col("rn") <= _PQ_TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    matched = (
-        pq.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return pq.join(matched, "query_id", "left").select(
+    pq = topk(cands, F.desc("approx_raw"), _PQ_TOP_K)
+    exact = exact_topk(em, queries, _PQ_TOP_K)
+    hits = hit_counts(pq, exact, ("query_id",))
+    return pq.join(hits, "query_id", "left").select(
         "query_id",
         "neighbor_id",
         "code1",
         "code2",
         F.round("approx_raw", 6).alias("approx_sim"),
         F.round("exact_raw", 6).alias("exact_sim"),
-        F.round(
-            F.coalesce(F.col("n_hit"), F.lit(0)) / float(_PQ_TOP_K), 6
-        ).alias("recall"),
+        _recall(_PQ_TOP_K),
     )
 
 
@@ -2009,23 +1765,8 @@ def _q340_rotated(spark, sf_dir) -> DataFrame:
             FROM codes c JOIN queries qu ON c.vec_id <> qu.query_id
         ) WHERE rn <= {_PQ_TOP_K}
     ),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {dot_sql('q.q_emb', 'c.embedding')} DESC,
-                                c.vec_id
-                   ) AS rn
-            FROM queries q JOIN embeddings c ON c.vec_id <> q.query_id
-        ) WHERE rn <= {_PQ_TOP_K}
-    ),
-    matched AS (
-        SELECT p.query_id, COUNT(*) AS n_hit
-        FROM pq p JOIN exact e
-          ON e.query_id = p.query_id AND e.neighbor_id = p.neighbor_id
-        GROUP BY p.query_id
-    )
+    {_exact_cte(_PQ_TOP_K)},
+    {_matched_cte('pq')}
     SELECT p.query_id, p.neighbor_id, p.code1, p.code2,
            round(p.approx_raw, 6) + 0.0 AS approx_sim,
            round(p.exact_raw, 6) + 0.0 AS exact_sim,
@@ -2057,7 +1798,7 @@ def q340_pq_rotated(spark, sf_dir) -> DataFrame:
     Hashed data: per-subspace codes from codebooks trained ON THE
     ROTATED slices (two more unrolled decimal-exact Lloyd chains over
     materialized rotated relations), ADC approx vs exact scores, and
-    recall@{_PQ_TOP_K} — directly comparable against q331's unrotated
+    recall@5 — directly comparable against q331's unrotated
     row to measure what the rotation buys on this corpus.
 
     At 100 TB: the rotation is one scan-stage matvec (64 fused
@@ -2065,31 +1806,14 @@ def q340_pq_rotated(spark, sf_dir) -> DataFrame:
     shuffle) writing the rotated table once — the same write-once memo
     every consumer then scans (io.materialize_once); queries rotate at
     lookup time (64×64 flops per query, driver-trivial)."""
-    from .clustering import kmeans_fit
-
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     rot = _q340_rotated(spark, sf_dir)
-    folded = []
-    for i, (st, ln) in enumerate(_PQ_SUBS):
-        sub = rot.select(
-            "vec_id", F.slice("embedding", st, ln).alias("embedding")
-        )
-        _, cents = kmeans_fit(
-            spark, sf_dir, k=_PQ_CB_K, iterations=_IVF_ITERS, source=sub
-        )
-        folded.append(
-            cents.agg(
-                F.array_sort(
-                    F.collect_list(F.struct("cent_id", "cent_emb"))
-                ).alias(f"__cb{i}")
-            )
-        )
     # encode in rotated space, carry the ORIGINAL vector for exact scoring
     corpus = rot.select("vec_id", F.col("embedding").alias("r_emb")).join(
         em, "vec_id"
     )
-    for f in folded:
-        corpus = corpus.crossJoin(F.broadcast(f))
+    for cb in _pq_codebooks(spark, sf_dir, rot, "embedding"):
+        corpus = corpus.crossJoin(F.broadcast(cb))
     corpus = corpus.select(
         "vec_id",
         "embedding",
@@ -2108,10 +1832,7 @@ def q340_pq_rotated(spark, sf_dir) -> DataFrame:
         F.slice("r_emb", *_PQ_SUBS[0]).alias("q1"),
         F.slice("r_emb", *_PQ_SUBS[1]).alias("q2"),
     )
-    w_approx = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_raw"), F.asc("neighbor_id")
-    )
-    pq = (
+    cands = (
         corpus.join(
             F.broadcast(queries), F.col("vec_id") != F.col("query_id")
         )
@@ -2126,42 +1847,18 @@ def q340_pq_rotated(spark, sf_dir) -> DataFrame:
             ).alias("approx_raw"),
             dot(F.col("embedding"), F.col("q_emb")).alias("exact_raw"),
         )
-        .withColumn("rn", F.row_number().over(w_approx))
-        .filter(F.col("rn") <= _PQ_TOP_K)
-        .drop("rn")
     )
-    w_exact = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_raw"), F.asc("neighbor_id")
-    )
-    exact = (
-        em.join(
-            F.broadcast(queries.select("query_id", "q_emb")),
-            F.col("vec_id") != F.col("query_id"),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
-        )
-        .withColumn("rn", F.row_number().over(w_exact))
-        .filter(F.col("rn") <= _PQ_TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    matched = (
-        pq.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return pq.join(matched, "query_id", "left").select(
+    pq = topk(cands, F.desc("approx_raw"), _PQ_TOP_K)
+    exact = exact_topk(em, queries, _PQ_TOP_K)
+    hits = hit_counts(pq, exact, ("query_id",))
+    return pq.join(hits, "query_id", "left").select(
         "query_id",
         "neighbor_id",
         "code1",
         "code2",
         F.round("approx_raw", 6).alias("approx_sim"),
         F.round("exact_raw", 6).alias("exact_sim"),
-        F.round(
-            F.coalesce(F.col("n_hit"), F.lit(0)) / float(_PQ_TOP_K), 6
-        ).alias("recall"),
+        _recall(_PQ_TOP_K),
     )
 
 
@@ -2214,23 +1911,8 @@ def q340_pq_rotated(spark, sf_dir) -> DataFrame:
               ON c.cell = qu.q_cell AND c.vec_id <> qu.query_id
         ) WHERE rn <= {_IVF_TOP_K}
     ),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {dot_sql('q.q_emb', 'c.embedding')} DESC,
-                                c.vec_id
-                   ) AS rn
-            FROM queries q JOIN embeddings c ON c.vec_id <> q.query_id
-        ) WHERE rn <= {_IVF_TOP_K}
-    ),
-    matched AS (
-        SELECT i.query_id, COUNT(*) AS n_hit
-        FROM ivfpq i JOIN exact e
-          ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
-        GROUP BY i.query_id
-    )
+    {_exact_cte(_IVF_TOP_K)},
+    {_matched_cte('ivfpq')}
     SELECT i.query_id, i.neighbor_id, i.code1, i.code2,
            round(i.approx_raw, 6) + 0.0 AS approx_sim,
            round(i.exact_raw, 6) + 0.0 AS exact_sim,
@@ -2264,28 +1946,13 @@ def q334_ivfpq(spark, sf_dir) -> DataFrame:
     ranking is per-partition window heads. At 100 TB the encoded table
     persists partitioned by cell and the scan reads only probed
     partitions — q328's contract with q331's bytes."""
-    from .clustering import kmeans, kmeans_fit
+    from .clustering import kmeans
 
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     asg = kmeans(spark, sf_dir, k=_N_CENTROIDS, iterations=_IVF_ITERS)
-    folded = []
-    for i, (st, ln) in enumerate(_PQ_SUBS):
-        sub = em.select(
-            "vec_id", F.slice("embedding", st, ln).alias("embedding")
-        )
-        _, cents = kmeans_fit(
-            spark, sf_dir, k=_PQ_CB_K, iterations=_IVF_ITERS, source=sub
-        )
-        folded.append(
-            cents.agg(
-                F.array_sort(
-                    F.collect_list(F.struct("cent_id", "cent_emb"))
-                ).alias(f"__cb{i}")
-            )
-        )
     corpus = asg
-    for f in folded:
-        corpus = corpus.crossJoin(F.broadcast(f))
+    for cb in _pq_codebooks(spark, sf_dir, em, "embedding"):
+        corpus = corpus.crossJoin(F.broadcast(cb))
     corpus = corpus.select(
         "vec_id",
         "embedding",
@@ -2293,19 +1960,13 @@ def q334_ivfpq(spark, sf_dir) -> DataFrame:
         F.expr(_pq_best_expr("__cb0", *_PQ_SUBS[0])).alias("__b0"),
         F.expr(_pq_best_expr("__cb1", *_PQ_SUBS[1])).alias("__b1"),
     )
-    queries = corpus.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
+    queries = _ivf_queries(
+        corpus,
         F.col("cell").alias("q_cell"),
         F.slice("embedding", *_PQ_SUBS[0]).alias("q1"),
         F.slice("embedding", *_PQ_SUBS[1]).alias("q2"),
     )
-    w_approx = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_raw"), F.asc("neighbor_id")
-    )
-    ivfpq = (
+    cands = (
         corpus.join(
             F.broadcast(queries),
             (F.col("cell") == F.col("q_cell"))
@@ -2322,42 +1983,18 @@ def q334_ivfpq(spark, sf_dir) -> DataFrame:
             ).alias("approx_raw"),
             dot(F.col("embedding"), F.col("q_emb")).alias("exact_raw"),
         )
-        .withColumn("rn", F.row_number().over(w_approx))
-        .filter(F.col("rn") <= _IVF_TOP_K)
-        .drop("rn")
     )
-    w_exact = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_raw"), F.asc("neighbor_id")
-    )
-    exact = (
-        em.join(
-            F.broadcast(queries.select("query_id", "q_emb")),
-            F.col("vec_id") != F.col("query_id"),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
-        )
-        .withColumn("rn", F.row_number().over(w_exact))
-        .filter(F.col("rn") <= _IVF_TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    matched = (
-        ivfpq.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return ivfpq.join(matched, "query_id", "left").select(
+    ivfpq = topk(cands, F.desc("approx_raw"), _IVF_TOP_K)
+    exact = exact_topk(em, queries, _IVF_TOP_K)
+    hits = hit_counts(ivfpq, exact, ("query_id",))
+    return ivfpq.join(hits, "query_id", "left").select(
         "query_id",
         "neighbor_id",
         "code1",
         "code2",
         F.round("approx_raw", 6).alias("approx_sim"),
         F.round("exact_raw", 6).alias("exact_sim"),
-        F.round(
-            F.coalesce(F.col("n_hit"), F.lit(0)) / float(_IVF_TOP_K), 6
-        ).alias("recall"),
+        _recall(_IVF_TOP_K),
     )
 
 
@@ -2473,23 +2110,8 @@ def _q335_resid(spark, sf_dir) -> DataFrame:
               ON c.cell = qu.q_cell AND c.vec_id <> qu.query_id
         ) WHERE rn <= {_IVF_TOP_K}
     ),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {dot_sql('q.q_emb', 'c.embedding')} DESC,
-                                c.vec_id
-                   ) AS rn
-            FROM queries q JOIN embeddings c ON c.vec_id <> q.query_id
-        ) WHERE rn <= {_IVF_TOP_K}
-    ),
-    matched AS (
-        SELECT i.query_id, COUNT(*) AS n_hit
-        FROM ivfpq i JOIN exact e
-          ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
-        GROUP BY i.query_id
-    )
+    {_exact_cte(_IVF_TOP_K)},
+    {_matched_cte('ivfpq')}
     SELECT i.query_id, i.neighbor_id, i.code1, i.code2,
            round(i.approx_raw, 6) + 0.0 AS approx_sim,
            round(i.exact_raw, 6) + 0.0 AS exact_sim,
@@ -2540,28 +2162,11 @@ def q335_ivfpq_residual(spark, sf_dir) -> DataFrame:
     broadcast-argmax loop over residual slices; encode + reconstruct
     ride the same one-scan fold family as q331/q334. Corpus never
     shuffles."""
-    from .clustering import kmeans_fit
-
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     resid = _q335_resid(spark, sf_dir)
-    folded = []
-    for i, (st, ln) in enumerate(_PQ_SUBS):
-        sub = resid.select(
-            "vec_id", F.slice("r_emb", st, ln).alias("embedding")
-        )
-        _, cents = kmeans_fit(
-            spark, sf_dir, k=_PQ_CB_K, iterations=_IVF_ITERS, source=sub
-        )
-        folded.append(
-            cents.agg(
-                F.array_sort(
-                    F.collect_list(F.struct("cent_id", "cent_emb"))
-                ).alias(f"__cb{i}")
-            )
-        )
     corpus = resid
-    for f in folded:
-        corpus = corpus.crossJoin(F.broadcast(f))
+    for cb in _pq_codebooks(spark, sf_dir, resid, "r_emb"):
+        corpus = corpus.crossJoin(F.broadcast(cb))
     corpus = corpus.select(
         "vec_id",
         "embedding",
@@ -2574,19 +2179,13 @@ def q335_ivfpq_residual(spark, sf_dir) -> DataFrame:
             "__b1"
         ),
     )
-    queries = corpus.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
+    queries = _ivf_queries(
+        corpus,
         F.col("cell").alias("q_cell"),
         F.slice("embedding", *_PQ_SUBS[0]).alias("q1"),
         F.slice("embedding", *_PQ_SUBS[1]).alias("q2"),
     )
-    w_approx = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_raw"), F.asc("neighbor_id")
-    )
-    ivfpq = (
+    cands = (
         corpus.join(
             F.broadcast(queries),
             (F.col("cell") == F.col("q_cell"))
@@ -2604,42 +2203,18 @@ def q335_ivfpq_residual(spark, sf_dir) -> DataFrame:
             ).alias("approx_raw"),
             dot(F.col("embedding"), F.col("q_emb")).alias("exact_raw"),
         )
-        .withColumn("rn", F.row_number().over(w_approx))
-        .filter(F.col("rn") <= _IVF_TOP_K)
-        .drop("rn")
     )
-    w_exact = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_raw"), F.asc("neighbor_id")
-    )
-    exact = (
-        em.join(
-            F.broadcast(queries.select("query_id", "q_emb")),
-            F.col("vec_id") != F.col("query_id"),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
-        )
-        .withColumn("rn", F.row_number().over(w_exact))
-        .filter(F.col("rn") <= _IVF_TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    matched = (
-        ivfpq.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return ivfpq.join(matched, "query_id", "left").select(
+    ivfpq = topk(cands, F.desc("approx_raw"), _IVF_TOP_K)
+    exact = exact_topk(em, queries, _IVF_TOP_K)
+    hits = hit_counts(ivfpq, exact, ("query_id",))
+    return ivfpq.join(hits, "query_id", "left").select(
         "query_id",
         "neighbor_id",
         "code1",
         "code2",
         F.round("approx_raw", 6).alias("approx_sim"),
         F.round("exact_raw", 6).alias("exact_sim"),
-        F.round(
-            F.coalesce(F.col("n_hit"), F.lit(0)) / float(_IVF_TOP_K), 6
-        ).alias("recall"),
+        _recall(_IVF_TOP_K),
     )
 
 
@@ -2737,23 +2312,8 @@ def _percell_union(j: int, what: str) -> str:
               ON c.cell = qu.q_cell AND c.vec_id <> qu.query_id
         ) WHERE rn <= {_IVF_TOP_K}
     ),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {dot_sql('q.q_emb', 'c.embedding')} DESC,
-                                c.vec_id
-                   ) AS rn
-            FROM queries q JOIN embeddings c ON c.vec_id <> q.query_id
-        ) WHERE rn <= {_IVF_TOP_K}
-    ),
-    matched AS (
-        SELECT i.query_id, COUNT(*) AS n_hit
-        FROM ivfpq i JOIN exact e
-          ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
-        GROUP BY i.query_id
-    )
+    {_exact_cte(_IVF_TOP_K)},
+    {_matched_cte('ivfpq')}
     SELECT i.query_id, i.neighbor_id, i.code1, i.code2,
            round(i.approx_raw, 6) + 0.0 AS approx_sim,
            round(i.exact_raw, 6) + 0.0 AS exact_sim,
@@ -2851,19 +2411,13 @@ def q337_ivfpq_percell(spark, sf_dir) -> DataFrame:
             ),
         )
     )
-    queries = corpus.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
+    queries = _ivf_queries(
+        corpus,
         F.col("cell").alias("q_cell"),
         F.slice("embedding", *_PQ_SUBS[0]).alias("q1"),
         F.slice("embedding", *_PQ_SUBS[1]).alias("q2"),
     )
-    w_approx = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_raw"), F.asc("neighbor_id")
-    )
-    ivfpq = (
+    cands = (
         corpus.join(
             F.broadcast(queries),
             (F.col("cell") == F.col("q_cell"))
@@ -2881,42 +2435,18 @@ def q337_ivfpq_percell(spark, sf_dir) -> DataFrame:
             ).alias("approx_raw"),
             dot(F.col("embedding"), F.col("q_emb")).alias("exact_raw"),
         )
-        .withColumn("rn", F.row_number().over(w_approx))
-        .filter(F.col("rn") <= _IVF_TOP_K)
-        .drop("rn")
     )
-    w_exact = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_raw"), F.asc("neighbor_id")
-    )
-    exact = (
-        em.join(
-            F.broadcast(queries.select("query_id", "q_emb")),
-            F.col("vec_id") != F.col("query_id"),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
-        )
-        .withColumn("rn", F.row_number().over(w_exact))
-        .filter(F.col("rn") <= _IVF_TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    matched = (
-        ivfpq.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return ivfpq.join(matched, "query_id", "left").select(
+    ivfpq = topk(cands, F.desc("approx_raw"), _IVF_TOP_K)
+    exact = exact_topk(em, queries, _IVF_TOP_K)
+    hits = hit_counts(ivfpq, exact, ("query_id",))
+    return ivfpq.join(hits, "query_id", "left").select(
         "query_id",
         "neighbor_id",
         "code1",
         "code2",
         F.round("approx_raw", 6).alias("approx_sim"),
         F.round("exact_raw", 6).alias("exact_sim"),
-        F.round(
-            F.coalesce(F.col("n_hit"), F.lit(0)) / float(_IVF_TOP_K), 6
-        ).alias("recall"),
+        _recall(_IVF_TOP_K),
     )
 
 
@@ -3066,17 +2596,7 @@ def _clustered_corpus_memo(spark, sf_dir) -> DataFrame:
             FROM cand
         ) WHERE rn <= {_IVF_TOP_K}
     ),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {dot_sql('q.q_emb', 'c.embedding')} DESC,
-                                c.vec_id
-                   ) AS rn
-            FROM queries q JOIN clustered c ON c.vec_id <> q.query_id
-        ) WHERE rn <= {_IVF_TOP_K}
-    ),
+    {_exact_cte(_IVF_TOP_K, corpus='clustered')},
     rec AS (
         SELECT t.nprobe, t.query_id, COUNT(*) AS n_hit
         FROM topk t JOIN exact e
@@ -3107,11 +2627,11 @@ def q343_ivf_clustered(spark, sf_dir) -> DataFrame:
 
     The corpus is derived in-plan (clustered_corpus): a planted Zipf
     over 5 anchors (50/25/12.5/6.25/6.25%), bit-identical cross-engine.
-    The result carries, per (query, nprobe∈{{1,{_CLU_PROBE_HI}}},
+    The result carries, per (query, nprobe∈{1,4},
     probed cell): the cell's member count and corpus share (occupancy —
     hot-cluster queries probe a cell holding ~half the corpus, the
     candidate-read tax the r9 proof measured at 20-34%) and
-    recall@{_IVF_TOP_K} vs the exact top-k over the same clustered
+    recall@3 vs the exact top-k over the same clustered
     corpus (the nprobe lift). A quantizer regression, an occupancy
     shift, or a recall drop all hash-fail.
 
@@ -3148,36 +2668,15 @@ def q343_ivf_clustered(spark, sf_dir) -> DataFrame:
         F.count("*").cast("long").alias("cell_n")
     )
     total = clu.agg(F.count("*").alias("n"))
-    queries = clu.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    w_cell = Window.partitionBy("query_id").orderBy(
-        F.desc("c_sim"), F.asc("cent_id")
-    )
-    ranked = (
-        queries.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "q_emb",
-            "cent_id",
-            dot(F.col("q_emb"), F.col("cent_emb")).alias("c_sim"),
-        )
-        .withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") <= _CLU_PROBE_HI)
-        .select("query_id", "q_emb", "cent_id", "rn")
-    )
+    queries = _ivf_queries(clu)
+    ranked = rank_cells(queries, cents, _CLU_PROBE_HI)
     probes = spark.range(1).select(
         F.explode(F.array(F.lit(1), F.lit(_CLU_PROBE_HI))).alias("nprobe")
     )
     probed = probes.join(
         ranked, ranked["rn"] <= probes["nprobe"]
     ).select("nprobe", "query_id", "q_emb", "cent_id", "rn")
-    w_rank = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    topk = (
+    cands = (
         asg.join(F.broadcast(probed), ["cent_id"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
@@ -3186,28 +2685,12 @@ def q343_ivf_clustered(spark, sf_dir) -> DataFrame:
             F.col("vec_id").alias("neighbor_id"),
             dot(F.col("q_emb"), F.col("embedding")).alias("sim"),
         )
-        .withColumn("krn", F.row_number().over(w_rank))
-        .filter(F.col("krn") <= _IVF_TOP_K)
-        .select("nprobe", "query_id", "neighbor_id")
     )
-    w_exact = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    exact = (
-        clu.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("q_emb"), F.col("embedding")).alias("sim"),
-        )
-        .withColumn("krn", F.row_number().over(w_exact))
-        .filter(F.col("krn") <= _IVF_TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    rec = (
-        topk.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("nprobe", "query_id")
-        .agg(F.count("*").alias("n_hit"))
+    by = ("nprobe", "query_id")
+    rec = hit_counts(
+        topk(cands, F.desc("sim"), _IVF_TOP_K, by),
+        exact_topk(clu, queries, _IVF_TOP_K),
+        by,
     )
     return (
         probed.select("nprobe", "query_id", "cent_id", "rn")
@@ -3221,9 +2704,7 @@ def q343_ivf_clustered(spark, sf_dir) -> DataFrame:
             "cent_id",
             "cell_n",
             F.round(F.col("cell_n") / F.col("n"), 6).alias("cell_share"),
-            F.round(
-                F.coalesce(F.col("n_hit"), F.lit(0)) / float(_IVF_TOP_K), 6
-            ).alias("recall"),
+            _recall(_IVF_TOP_K),
         )
     )
 
@@ -3352,13 +2833,7 @@ def binary_hamming_topk(em: DataFrame) -> DataFrame:
     hamming = F.bit_count(
         F.col("w_lo").bitwiseXOR(F.col("q_lo"))
     ) + F.bit_count(F.col("w_hi").bitwiseXOR(F.col("q_hi")))
-    w_h = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    w_e = Window.partitionBy("query_id").orderBy(
-        F.desc("exact_sim"), F.asc("neighbor_id")
-    )
-    return (
+    cands = (
         packed.withColumnRenamed("vec_id", "neighbor_id")
         .join(F.broadcast(queries), F.col("neighbor_id") != F.col("query_id"))
         .select(
@@ -3369,12 +2844,9 @@ def binary_hamming_topk(em: DataFrame) -> DataFrame:
                 "exact_sim"
             ),
         )
-        .withColumn("rn_h", F.row_number().over(w_h))
-        .filter(F.col("rn_h") <= _BQ_RERANK)
-        .withColumn("rn_e", F.row_number().over(w_e))
-        .filter(F.col("rn_e") <= _PQ_TOP_K)
-        .select("query_id", "neighbor_id", "hamming", "exact_sim")
     )
+    screened = topk(cands, F.asc("hamming"), _BQ_RERANK)
+    return topk(screened, F.desc("exact_sim"), _PQ_TOP_K)
 
 
 # ---- q364: incremental IVF re-training drift check -------------------------
@@ -3384,56 +2856,14 @@ _DRIFT_W0_PRED = "vec_id % 2 = 0"  # epoch-0 corpus: the first ingest wave
 
 def _ivf_probe_hits(spark, sf_dir, asg: DataFrame) -> DataFrame:
     """(query_id, n_hit) for the 5 standard query vectors: single-probe
-    IVF top-{k} hits against the exact brute-force top-{k} — the recall
+    IVF top-3 hits against the exact brute-force top-3 — the recall
     numerator q364 differences across model epochs. Same probe/exact
     shapes as _ivf_search_with_recall, reduced to the per-query count
     (queries with ZERO hits still emit a row — the drift check must see
     a recall collapse, not lose the row)."""
-    queries = asg.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("cent_id").alias("q_cent"),
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_raw"), F.asc("neighbor_id")
-    )
-    ivf = (
-        asg.join(
-            F.broadcast(queries),
-            (F.col("cent_id") == F.col("q_cent"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
-        )
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= _IVF_TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    em = table(spark, sf_dir, "embeddings")
-    exact = (
-        em.join(
-            F.broadcast(queries.select("query_id", "q_emb")),
-            F.col("vec_id") != F.col("query_id"),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("q_emb"), F.col("embedding")).alias("sim_raw"),
-        )
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= _IVF_TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    matched = (
-        ivf.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
+    queries = _ivf_queries(asg)
+    exact = exact_topk(table(spark, sf_dir, "embeddings"), queries, _IVF_TOP_K)
+    matched = hit_counts(ivf_cell_topk(asg, _IVF_TOP_K), exact, ("query_id",))
     return queries.select("query_id").join(matched, "query_id", "left").select(
         "query_id", F.coalesce(F.col("n_hit"), F.lit(0)).alias("n_hit")
     )
@@ -3456,17 +2886,7 @@ def _ivf_probe_hits(spark, sf_dir, asg: DataFrame) -> DataFrame:
            FROM a0 WHERE vec_id >= 100 AND vec_id < 105),
     q1 AS (SELECT vec_id AS query_id, embedding AS q_emb, cent_id AS q_cent
            FROM a1 WHERE vec_id >= 100 AND vec_id < 105),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {dot_sql('q.q_emb', 'c.embedding')} DESC,
-                                c.vec_id
-                   ) AS rn
-            FROM q0 q JOIN embeddings c ON c.vec_id <> q.query_id
-        ) WHERE rn <= {_IVF_TOP_K}
-    ),
+    {_exact_cte(_IVF_TOP_K, queries='q0')},
     ivf0 AS (
         SELECT query_id, neighbor_id FROM (
             SELECT q.query_id, a.vec_id AS neighbor_id,
@@ -3513,12 +2933,12 @@ def q364_ivf_retrain_drift(spark, sf_dir) -> DataFrame:
     """INCREMENTAL IVF RE-TRAINING DRIFT CHECK (VERDICT r12 #5) — the
     two-epoch production shape the one-shot trainers (q319/q327) don't
     exercise: epoch 0 trains the coarse quantizer on the FIRST INGEST
-    WAVE only ({_DRIFT_W0_PRED} — kmeans_fit's train_where, the q327
+    WAVE only (vec_id % 2 = 0 — kmeans_fit's train_where, the q327
     sample-training path) and serves the grown corpus with that STALE
     model; epoch 1 re-trains on the full corpus. The drift between them
     is measured as oracled DATA, per the q325 calibration discipline
     (quality numbers ride in the hashed result, never in prose):
-    recall@{_IVF_TOP_K} per standard query under the stale vs the
+    recall@3 per standard query under the stale vs the
     re-trained model (and their delta), plus the re-assignment delta —
     how many vectors change cells on re-train (moved_n, moved_frac),
     which is exactly the index-rebuild cost the re-train cadence has to

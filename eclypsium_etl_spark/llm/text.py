@@ -1311,7 +1311,7 @@ def _tr_iter_duck(prev: str, cur: str) -> str:
     """,
 )
 def q156_textrank(spark, sf_dir) -> DataFrame:
-    """TextRank keyword extraction: PageRank ({_TR_ITERS} fixed
+    """TextRank keyword extraction: PageRank (3 fixed
     iterations, d=0.85) over the undirected adjacent-token co-occurrence
     graph — the classic iterative graph algorithm, with an EXACT
     differential oracle (the oracle unrolls the same iterations as
@@ -1578,7 +1578,7 @@ def q318_posting_segments(spark, sf_dir) -> DataFrame:
     """SEGMENTED (chunked) inverted index — q159's registered 100 TB
     variant (VERDICT r7 #2): the posting list for a token is sharded by
     document range into fixed-width SEGMENTS (seg_id = doc_id div
-    {_SEG_DOCS}), so no single collected posting buffer can exceed the
+    100), so no single collected posting buffer can exceed the
     segment width no matter how hot the token — q159's relative df cap
     bounds lists as a fraction of the corpus, which still grows WITH the
     corpus; the segment bound is absolute. This is the layout real
@@ -1592,7 +1592,7 @@ def q318_posting_segments(spark, sf_dir) -> DataFrame:
     round-6 q159 audit, unchanged here) — a map-side-combined df count
     joins back to the posting stream, so a Zipf-hot stop token never
     builds a buffer at all; then the collect groups on (token, seg_id),
-    whose per-group cardinality is ≤ {_SEG_DOCS} BY CONSTRUCTION. The
+    whose per-group cardinality is ≤ 100 BY CONSTRUCTION. The
     grouping key carries the global df along (it is functionally
     dependent on token), so a reader gets term statistics without a
     second join. Hot-token fan-out is measured on the 10x fixture in
@@ -1664,7 +1664,7 @@ _CURR_SHARDS = 10
 def q180_curriculum_order(spark, sf_dir) -> DataFrame:
     """Curriculum sharding: docs ranked easiest-first (quality as the
     difficulty proxy — a perplexity model slots in identically, q133)
-    and cut into {_CURR_SHARDS} equal shards with ntile; training then
+    and cut into 10 equal shards with ntile; training then
     consumes shards in order. Emits the shard manifest (count, mean
     quality via decimal-exact sums, token budget) — what the data
     loader's schedule is built from. The global ntile is a single-
@@ -2105,7 +2105,7 @@ _SHARDS_N = 8
 )
 def q193_shard_rebalance(spark, sf_dir) -> DataFrame:
     """Size-balanced training-shard assignment: docs ranked by token
-    count descending and dealt round-robin across {_SHARDS_N} shards —
+    count descending and dealt round-robin across 8 shards —
     the deterministic one-pass approximation of LPT bin balancing
     (true greedy-least-loaded is inherently sequential; snake-order
     round-robin over size-sorted items bounds imbalance tightly when
@@ -2705,7 +2705,7 @@ def _bpe_seq_spark(word_col: str) -> str:
 def q268_bpe_merges(spark, sf_dir) -> DataFrame:
     """Byte-pair-encoding merge learning (Sennrich et al. 2016 — the
     algorithm behind GPT/LLaMA tokenizers), distributed and fully
-    oracled for {_BPE_ROUNDS} merge rounds: word frequencies roll up
+    oracled for 3 merge rounds: word frequencies roll up
     once (the classic BPE-on-word-counts optimization — corpus size
     drops out, only the vocabulary's weighted symbol sequences iterate),
     then each round (a) explodes adjacent symbol pairs weighted by word
@@ -3457,13 +3457,13 @@ def q284_corpus_manifest(spark, sf_dir) -> DataFrame:
     plan, composing three round-4 operators end-to-end — DSIR keeps the
     target-matched top-K (q282), the CCNet gate drops the per-language
     perplexity tail (q279), and the surviving corpus lays out as exact
-    {_CHUNK_L}-token blocks (q277's concat-and-chunk), reported as the
+    256-token blocks (q277's concat-and-chunk), reported as the
     per-block shard manifest (docs per block, fill level, doc-id span)
     a training loader consumes. Every stage is the already-oracled
     kernel reused verbatim, and the composed oracle replays all three —
     so a drift anywhere in the selection or layout chain moves block
     boundaries and fails the hash (interior blocks must land EXACTLY
-    full: n_tokens = {_CHUNK_L}). The q200 discipline, upgraded to the
+    full: n_tokens = 256). The q200 discipline, upgraded to the
     round-4 curation stack."""
     sel = q282_dsir_weights(spark, sf_dir).select("doc_id", "selected")
     buck = q279_ccnet_buckets(spark, sf_dir).select("doc_id", "bucket")
@@ -3887,7 +3887,7 @@ _APPORTION_BUDGET = 1000  # documents to allocate across sources
 def q309_quota_apportion(spark, sf_dir) -> DataFrame:
     """Largest-remainder (Hare) quota APPORTIONMENT — the integer
     allocation problem every fixed-budget data mix hits: proportional
-    shares of a {_APPORTION_BUDGET}-doc budget are fractional, naive
+    shares of a 1000-doc budget are fractional, naive
     rounding over- or under-spends the budget, and largest-remainder is
     the standard fix — floor every share, then hand the leftover K
     units to the K largest remainders (deterministic remainder-desc,
@@ -4841,17 +4841,17 @@ def q360_rag_capstone(spark, sf_dir) -> DataFrame:
     hard-negative training set. No stage materializes: chunking is the
     scan projection, pooling is one (doc, dim)-keyed aggregate, both
     retrieval sides broadcast the 5 query rows, and the fusion only
-    ever sees 2·{_RRF_DEPTH} rows per query — Catalyst plans the whole
+    ever sees 2·20 rows per query — Catalyst plans the whole
     chain as one DAG with zero collect/write boundaries (the
     composed-oracle replays every stage, so drift ANYWHERE in the
     chain moves ranks and fails the hash).
 
     Stage semantics, each the already-oracled kernel:
     - CHUNK (q138 verbatim — the registered function is called, not
-      re-spelled): overlapping {_CAP_W}-token windows, stride
-      {_CAP_S}; empty chunks dropped on both sides (the chunk_text
+      re-spelled): overlapping 64-token windows, stride
+      48; empty chunks dropped on both sides (the chunk_text
       re-split keeps tokenization engine-symmetric).
-    - POOL (q178's kernel in array form): vec_id div {_CAP_PC} stands
+    - POOL (q178's kernel in array form): vec_id div 4 stands
       in for the chunker's doc_id — q178's own fixture convention —
       per-dim decimal-exact means rounded to 9dp (+0.0 normalizes the
       -0.0 divergence), reassembled in dimension order.
@@ -4860,11 +4860,11 @@ def q360_rag_capstone(spark, sf_dir) -> DataFrame:
       both engines max identical doubles — the q349 rounding
       discipline moved one stage earlier), dense exact top-k over
       pooled vectors via the dot fold; both modalities rank to depth
-      {_RRF_DEPTH} per query under (score DESC, doc) total order.
+      20 per query under (score DESC, doc) total order.
     - FUSE + MINE (q349's RRF, q179's exclusion): reciprocal-rank
-      fusion at c={_RRF_C}, and the query's own document — the
+      fusion at c=60, and the query's own document — the
       positive — is excluded on BOTH modalities by construction, so
-      the fused top-{_RRF_TOP} IS the hard-negative set: maximally
+      the fused top-10 IS the hard-negative set: maximally
       confusable non-positives, ranked by cross-modal agreement.
 
     100 TB posture: identical to its parents — the chunker rides the
@@ -5358,11 +5358,11 @@ def q367_phrase_positional(spark, sf_dir) -> DataFrame:
     the pos+1 adjacency SELF-JOIN on (doc_id, chunk_id, pos): all three
     join keys are equi (Catalyst folds ``b.pos = a.pos + 1`` into an
     equi-key), so occurrences co-partition with the postings and never
-    fan out. The corpus's top-{_PHR_TOP_P} bigrams (count DESC, phrase
+    fan out. The corpus's top-5 bigrams (count DESC, phrase
     ASC — deterministic) stand in for a query workload; each returns
-    its top-{_PHR_TOP_K} documents by phrase frequency.
+    its top-3 documents by phrase frequency.
 
-    Chunk overlap note: the {_CAP_W}/{_CAP_S} overlapping chunker
+    Chunk overlap note: the 64/48 overlapping chunker
     counts a bigram instance once per chunk containing it — a property
     of chunk-scoped retrieval (q360's max-passage has the same view),
     replayed identically by the oracle.

@@ -173,8 +173,8 @@ def q84_skew_salted_join(spark, sf_dir) -> DataFrame:
     """Manual salting recipe for a skewed join (the hand-rolled version of
     what AQE skew-join does at runtime): the fact side derives a
     deterministic salt from a row attribute, the dimension side explodes
-    ×{_SALTS}, and the join key becomes (user_id, salt) — a hot user's rows
-    now spread over {_SALTS} reducers. Semantics must be IDENTICAL to the
+    ×8, and the join key becomes (user_id, salt) — a hot user's rows
+    now spread over 8 reducers. Semantics must be IDENTICAL to the
     unsalted join, which is exactly what the oracle checks."""
     from .. import ops
 

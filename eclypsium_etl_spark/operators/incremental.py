@@ -659,7 +659,7 @@ _SCD2_TWO_WAVE_ORACLE = f"""
 def q324_scd2_multiwave(spark, sf_dir) -> DataFrame:
     """CHAINED SCD2 merges — the second change wave applied to q317's
     already-merged state (SURVEY round-9 forward-plan item 1, built
-    early): wave 2 (effective {_SCD2_W2_DATE}) re-segments every 3rd
+    early): wave 2 (effective 2024-09-01) re-segments every 3rd
     customer to 'RETAIL', which exercises the paths a single merge
     can't: RE-CLOSING an already-superseded chain (a key hit by both
     waves closes v1 at wave 1 AND v2 at wave 2 — version arithmetic
@@ -750,7 +750,7 @@ def scd2_tombstone(
 def q326_scd2_tombstone(spark, sf_dir) -> DataFrame:
     """SCD2 SOFT-DELETE wave (SURVEY round-9 forward-plan item 2, built
     early): after q317's wave-1 merge, a tombstone batch (every 7th
-    customer, effective {_SCD2_W2_DATE}) closes each listed key's
+    customer, effective 2024-09-01) closes each listed key's
     CURRENT version — whichever version that is (v1 for untouched keys,
     v2 for wave-1-changed ones; getting that right is the point: a
     delete must chase the chain head, not the original row) — and
@@ -1473,8 +1473,8 @@ def scd2_merge_retro(
 )
 def q338_scd2_retro(spark, sf_dir) -> DataFrame:
     """OUT-OF-ORDER (late-arriving) SCD2 wave — VERDICT r8 #5: after
-    q317's wave-1 merge (effective {_SCD2_EFF_DATE}), a BACKFILL batch
-    arrives dated {_SCD2_RETRO_DATE} — between the initial load and
+    q317's wave-1 merge (effective 2024-06-01), a BACKFILL batch
+    arrives dated 2024-03-01 — between the initial load and
     wave 1. scd2_merge's in-plan guard rejects it (silent misordering is
     the only wrong answer); scd2_merge_retro inserts it into the
     timeline instead: the covering version splits at the retro date,

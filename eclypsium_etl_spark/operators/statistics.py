@@ -236,7 +236,7 @@ def q146_string_agg(spark, sf_dir) -> DataFrame:
 )
 def q147_anomaly_zscore(spark, sf_dir) -> DataFrame:
     """Windowed anomaly detection: each event's value scored against the
-    trailing {frame}-event mean/stddev of ITS user, anomalies = |z| > τ.
+    trailing 20-event mean/stddev of ITS user, anomalies = |z| > τ.
     One shuffle (partition by user), moments via windowed decimal sums so
     the flag is deterministic at any parallelism; the round-before-compare
     keeps the τ boundary bit-identical cross-engine. The streaming twin is

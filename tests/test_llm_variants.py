@@ -373,6 +373,45 @@ def test_q328_neighbors_come_from_query_cell(spark):
         assert abs(r.approx_sim - r.exact_sim) < 0.05
 
 
+def test_similarity_kernel_breaks_exact_ties_by_id(spark):
+    """The candidate -> verify kernel's total order on EXACT score ties,
+    which the noise fixture never produces (so no oracle covers it):
+    topk keeps the lower neighbor_id among equal scores whichever way
+    the score sorts, and rank_cells returns exactly nprobe cells per
+    query, equal centroid similarities broken by the lower cent_id."""
+    from pyspark.sql import functions as F
+
+    from eclypsium_etl_spark.llm.similarity import rank_cells, topk
+
+    cands = spark.createDataFrame(
+        [(1, 7, 0.5), (1, 3, 0.5), (1, 5, 0.5), (1, 9, 0.9),
+         (2, 4, 0.1), (2, 2, 0.1), (2, 6, 0.1)],
+        "query_id bigint, neighbor_id bigint, s double",
+    )
+
+    def kept(df):
+        return sorted((r.query_id, r.neighbor_id) for r in df.collect())
+
+    assert kept(topk(cands, F.desc("s"), 2)) == [(1, 3), (1, 9), (2, 2), (2, 4)]
+    assert kept(topk(cands, F.asc("s"), 2)) == [(1, 3), (1, 5), (2, 2), (2, 4)]
+
+    queries = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "query_id bigint, q_emb array<float>"
+    )
+    half = [0.5, 0.5]
+    cents = spark.createDataFrame(
+        [(4, half), (1, [1.0, 0.0]), (2, half), (3, [0.0, 1.0]), (0, half)],
+        "cent_id bigint, cent_emb array<float>",
+    )
+    for nprobe, want in ((2, {1: [1, 0], 2: [3, 0]}),
+                         (3, {1: [1, 0, 2], 2: [3, 0, 2]})):
+        got = {}
+        for r in sorted(rank_cells(queries, cents, nprobe).collect(),
+                        key=lambda r: (r.query_id, r.rn)):
+            got.setdefault(r.query_id, []).append(r.cent_id)
+        assert got == want, nprobe
+
+
 def test_binary_hamming_recall_vs_exact(spark):
     """q348's Hamming screen + exact rerank must recover most of the
     exact top-k ON CLUSTERED GEOMETRY (the q343 planted corpus) — sign

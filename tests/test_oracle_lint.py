@@ -32,6 +32,20 @@ def test_ordered_queries_is_a_permutation():
     assert order.index("q63_dedup_near") < order.index("q71_dedup_minhash_lsh")
 
 
+def test_query_docstrings_have_no_unrendered_placeholders():
+    """A docstring is a plain string, never an f-string: a ``{_NAME}``
+    in it reaches COVERAGE.md and help() verbatim instead of the value."""
+    import re
+
+    q, _ = registry.load_all()
+    offenders = {
+        name: re.findall(r"\{[A-Za-z_]\w*\}", fn.__doc__ or "")
+        for name, fn in sorted(q.items())
+    }
+    offenders = {k: v for k, v in offenders.items() if v}
+    assert not offenders, f"unrendered docstring placeholders: {offenders}"
+
+
 def test_oracled_results_are_driver_hashable(spark):
     """Every ORACLED query must return only scalar top-level columns.
 

@@ -797,10 +797,21 @@ def test_q319_trained_ivf_corpus_never_shuffles_for_training(spark):
     broadcast. Family test: q328 (int8 ADC inside the same trained
     cells) and q330 (maximin-seeded Lloyd — its seed scans run eagerly
     before this lineage, driver-side k×dim accumulation) must keep the
-    same discipline."""
-    for qid in ("q319_ivf_trained", "q328_ivf_adc",
-                "q330_kmeans_maximin_seed", "q331_pq_adc", "q334_ivfpq",
-                "q335_ivfpq_residual", "q337_ivfpq_percell"):
+    same discipline, and so must the multi-probe, ladder, sample-trained,
+    filtered, clustered and drift queries that share the candidate ->
+    verify kernel. Each id also pins a shuffle budget: the exchange
+    count of its plan when the kernel was folded (the unrolled lazy
+    Lloyd lineages account for the large ones)."""
+    max_shuffles = {
+        "q319_ivf_trained": 6, "q328_ivf_adc": 6,
+        "q330_kmeans_maximin_seed": 56, "q331_pq_adc": 118,
+        "q334_ivfpq": 274, "q335_ivfpq_residual": 274,
+        "q337_ivfpq_percell": 6, "q323_ivf_multiprobe": 8,
+        "q325_ivf_probe_ladder": 24, "q327_ivf_sample_trained": 104,
+        "q339_ivf_filtered": 10, "q343_ivf_clustered": 10,
+        "q364_ivf_retrain_drift": 109,
+    }
+    for qid, budget in max_shuffles.items():
         df = QUERIES[qid](spark, SF_CHECK)
         plan = plans.physical_plan(df)
         assert "CartesianProduct" not in plan, qid
@@ -809,6 +820,7 @@ def test_q319_trained_ivf_corpus_never_shuffles_for_training(spark):
         # exchange
         hash_parts = plans.exchange_partitioning(df)
         assert "embedding#" not in hash_parts, qid
+        assert plans.shuffle_count(df) <= budget, qid
 
 
 def test_q322_struct_rollup_prunes_text_column(spark):
