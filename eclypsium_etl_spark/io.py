@@ -220,6 +220,21 @@ def tmp_location(name: str) -> str:
     return os.path.join(base, name)
 
 
+def fixture_slug(sf_dir: str) -> str:
+    """The FULL fixture path as one name component: two data dirs that
+    share a basename must never alias each other's scratch state."""
+    return sf_dir.strip("/").replace("/", "_")
+
+
+def memo_location(tag: str, sf_dir: str, table: str) -> str:
+    """Write-once memo path for a derivation of fixture ``table``: ``tag``
+    (the derivation plus every constant that shapes the landed bytes), the
+    :func:`fixture_slug` and the :func:`source_stamp` of the table's
+    parquet, so a regenerated fixture is never served a stale memo."""
+    stamp = source_stamp(f"{sf_dir}/{table}.parquet")
+    return tmp_location(f"{tag}_{fixture_slug(sf_dir)}_{stamp}")
+
+
 def recreate_table(spark: SparkSession, name: str, loc: str, ddl: str) -> None:
     """Rebuild catalog table ``name`` from scratch: clear its files at
     ``loc``, drop it, then run ``ddl`` (the CREATE TABLE ... LOCATION

@@ -233,14 +233,11 @@ def kmeans_fit(
         # old assignments — the differential walk fails loudly if so).
         # float32 parquet round-trip is exact, so the memoized model is
         # bit-identical to the lazy one.
-        import os
+        from ..io import materialize_once, memo_location
 
-        from ..io import materialize_once, source_stamp
-
-        slug = sf_dir.strip("/").replace("/", "_")
-        stamp = source_stamp(os.path.join(sf_dir, "embeddings.parquet"))
-        ckey = tmp_location(f"kmeans_cent_v1_k{k}_i{iterations}_{slug}_{stamp}")
-        akey = tmp_location(f"kmeans_asg_v1_k{k}_i{iterations}_{slug}_{stamp}")
+        tag = f"v1_k{k}_i{iterations}"
+        ckey = memo_location(f"kmeans_cent_{tag}", sf_dir, "embeddings")
+        akey = memo_location(f"kmeans_asg_{tag}", sf_dir, "embeddings")
         cents_m = materialize_once(
             spark, ckey, lambda p: centroids.write.parquet(p)
         )
@@ -572,16 +569,13 @@ def semdedup_assignments(spark, sf_dir: str) -> DataFrame:
     Exposed as a helper so __spark_entry__'s warm-up can build it
     before the driver's correctness walk reaches q129 — the same
     pre-warm contract the shingle memo has."""
-    from ..io import materialize_once, source_stamp
+    from ..io import materialize_once, memo_location
 
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = em.filter(F.col("vec_id") < _K).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_emb")
     )
-    out = tmp_location(
-        f"semdedup_asg_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(f'{sf_dir}/embeddings.parquet')}",
-    )
+    out = memo_location("semdedup_asg", sf_dir, "embeddings")
     return materialize_once(
         spark,
         out,

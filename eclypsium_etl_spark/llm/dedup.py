@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import dot, dot_sql
-from ..io import table, table_spread, tmp_location
+from ..io import table, table_spread
 from ..registry import query
 
 _JACCARD_TAU = 0.4
@@ -92,7 +92,7 @@ def shingles(spark, sf_dir) -> DataFrame:
     accumulate across invocations and thrash the session's memory, while a
     re-scanned parquet intermediate is cheap, shared, and rerun-safe —
     exactly the persisted intermediate table a cluster pipeline would use."""
-    from ..io import materialize_once, source_stamp
+    from ..io import materialize_once, memo_location
 
     d = table(spark, sf_dir, "documents")
     # path slug from the FULL sf_dir (two data dirs sharing a basename must
@@ -102,10 +102,7 @@ def shingles(spark, sf_dir) -> DataFrame:
     # landed bytes belongs in the key — a session at a different core
     # count must not be served a layout fanned for another width)
     width = spark.sparkContext.defaultParallelism
-    out = tmp_location(
-        f"shingles_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(f'{sf_dir}/documents.parquet')}_w{width}",
-    )
+    out = memo_location(f"shingles_w{width}", sf_dir, "documents")
 
     # memoized per sf_dir (cross-process write-once, io.materialize_once):
     # q63/q71/q115 all consume this; without the memo each registry

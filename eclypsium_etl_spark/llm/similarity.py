@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import dot, dot_sql
-from ..io import table, tmp_location
+from ..io import table
 from ..registry import query
 
 _N_QUERIES = 10   # q64: vectors with vec_id < 10 are the query set
@@ -1704,17 +1704,11 @@ def _q340_rotated(spark, sf_dir) -> DataFrame:
     the query projection — then reads a flat parquet scan instead of
     duplicating the rotation subtree into each unrolled Lloyd lineage,
     the q335 plan-blowup guard). v1 + the rotation name in the key."""
-    import os
-
-    from ..io import materialize_once, source_stamp
+    from ..io import materialize_once, memo_location
 
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     rot = em.select("vec_id", F.expr(_ROT_EXPR_SPARK).alias("embedding"))
-    src_pq = os.path.join(sf_dir, "embeddings.parquet")
-    out = tmp_location(
-        f"q340_rot_hadamard_v1_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(src_pq)}",
-    )
+    out = memo_location("q340_rot_hadamard_v1", sf_dir, "embeddings")
     return materialize_once(spark, out, lambda p: rot.write.parquet(p))
 
 
@@ -2012,10 +2006,8 @@ def _q335_resid(spark, sf_dir) -> DataFrame:
     shingles convention). Every consumer then reads a flat scan, which
     is both the plan-blowup guard (see q335's docstring) and the
     production IVFADC shape."""
-    import os
-
     from .clustering import kmeans_fit
-    from ..io import materialize_once, source_stamp
+    from ..io import materialize_once, memo_location
 
     asg, ccents = kmeans_fit(
         spark, sf_dir, k=_N_CENTROIDS, iterations=_IVF_ITERS
@@ -2040,16 +2032,13 @@ def _q335_resid(spark, sf_dir) -> DataFrame:
             ).alias("r_emb"),
         )
     )
-    src_pq = os.path.join(sf_dir, "embeddings.parquet")
-    out = tmp_location(
-        # v1 + model knobs in the key, bumped in LOCKSTEP with the
-        # kmeans_cent_v1 memo it derives from: a kernel-version bump that
-        # refreshed the centroid memo but not this one would silently
-        # serve residuals computed from the OLD model (surfacing only as
-        # a differential hash failure instead of a rebuild).
-        f"q335_resid_v1_k{_N_CENTROIDS}_i{_IVF_ITERS}"
-        f"_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(src_pq)}",
+    # v1 + model knobs in the key, bumped in LOCKSTEP with the
+    # kmeans_cent_v1 memo it derives from: a kernel-version bump that
+    # refreshed the centroid memo but not this one would silently serve
+    # residuals computed from the OLD model (surfacing only as a
+    # differential hash failure instead of a rebuild).
+    out = memo_location(
+        f"q335_resid_v1_k{_N_CENTROIDS}_i{_IVF_ITERS}", sf_dir, "embeddings"
     )
     return materialize_once(
         spark, out, lambda p: resid_lazy.write.parquet(p)
@@ -2348,10 +2337,8 @@ def q337_ivfpq_percell(spark, sf_dir) -> DataFrame:
     join; the corpus never shuffles. At 100 TB the per-cell training
     is embarrassingly parallel (cells are disjoint) and serving is
     identical to q335 with a (cell, code)-keyed decode map."""
-    import os
-
     from .clustering import kmeans_fit
-    from ..io import materialize_once, source_stamp
+    from ..io import materialize_once, memo_location
 
     resid = _q335_resid(spark, sf_dir)
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -2391,10 +2378,7 @@ def q337_ivfpq_percell(spark, sf_dir) -> DataFrame:
             path
         )
 
-    out = tmp_location(
-        f"q337_cbs_v1_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(os.path.join(sf_dir, 'embeddings.parquet'))}",
-    )
+    out = memo_location("q337_cbs_v1", sf_dir, "embeddings")
     cb_df = materialize_once(spark, out, build_codebooks)
     corpus = (
         resid.join(F.broadcast(cb_df), "cell")
@@ -2537,15 +2521,9 @@ def _clustered_corpus_memo(spark, sf_dir) -> DataFrame:
     """materialize_once the derived corpus (the Lloyd chain over it
     re-references its source ~2^iters times — the q331/q335 plan-blowup
     class; a memoized parquet makes each re-reference a scan)."""
-    import os
+    from ..io import materialize_once, memo_location
 
-    from ..io import materialize_once, source_stamp
-
-    slug = sf_dir.strip("/").replace("/", "_")
-    stamp = source_stamp(os.path.join(sf_dir, "embeddings.parquet"))
-    key = tmp_location(
-        f"clu_corpus_v1_{slug}_{stamp}",
-    )
+    key = memo_location("clu_corpus_v1", sf_dir, "embeddings")
     return materialize_once(
         spark, key, lambda p: clustered_corpus(spark, sf_dir).write.parquet(p)
     )
@@ -2647,20 +2625,17 @@ def q343_ivf_clustered(spark, sf_dir) -> DataFrame:
     )
     # memoize the trained model: the lazy Lloyd chain would otherwise
     # re-run per downstream reference (occupancy, candidates, top-k)
-    import os
+    from ..io import materialize_once, memo_location
 
-    from ..io import materialize_once, source_stamp
-
-    slug = sf_dir.strip("/").replace("/", "_")
-    stamp = source_stamp(os.path.join(sf_dir, "embeddings.parquet"))
+    tag = f"v1_k{_CLU_K}_i{_IVF_ITERS}"
     cents = materialize_once(
         spark,
-        tmp_location(f"clu_ivf_cent_v1_k{_CLU_K}_i{_IVF_ITERS}_{slug}_{stamp}"),
+        memo_location(f"clu_ivf_cent_{tag}", sf_dir, "embeddings"),
         lambda p: cents.write.parquet(p),
     )
     asg = materialize_once(
         spark,
-        tmp_location(f"clu_ivf_asg_v1_k{_CLU_K}_i{_IVF_ITERS}_{slug}_{stamp}"),
+        memo_location(f"clu_ivf_asg_{tag}", sf_dir, "embeddings"),
         lambda p: assign_to_centroids(clu, cents).write.parquet(p),
     )
 

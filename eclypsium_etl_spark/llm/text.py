@@ -11,9 +11,9 @@ over counts. Per-doc operators (q73–q76) are scan-stage map work — at
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ..functions import davg, davg_sql
+from ..functions import davg, davg_sql, dot_sql as _dot_sql
 from ..io import table, table_spread, tmp_location
 from ..registry import ORACLE, query
 
@@ -4140,11 +4140,144 @@ _RRF_NQ = 5       # query documents: doc_id < 5
 _RRF_DEPTH = 20   # per-modality candidate depth fed into the fusion
 _RRF_TOP = 10     # fused results per query
 
+# ---- the hybrid-retrieval kernel: BM25 → depth-ranked lists → RRF fuse ----
+# Shared by q349, q352 and the RAG chain (q360/q361/q362/q366/q368); each
+# caller states only where its tf relation comes from and its dense scorer.
 
-@query(
-    "q349_hybrid_rrf",
-    oracle=f"""
-    WITH tok AS (
+
+def _bm25_score() -> Column:
+    """The rounded Σ BM25 addend over joined (tf, df, n, dl, avgdl) rows:
+    idf = ln(1 + (n − df + 0.5)/(df + 0.5)), tf saturated at k1 and
+    length-normalized by b. Rounded at 6dp so both engines rank the
+    same doubles."""
+    idf = F.log(1.0 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
+    return F.round(
+        F.sum(
+            idf
+            * F.col("tf")
+            * (_RRF_K1 + 1.0)
+            / (
+                F.col("tf")
+                + _RRF_K1
+                * (1.0 - _RRF_B + _RRF_B * F.col("dl") / F.col("avgdl"))
+            )
+        ),
+        6,
+    )
+
+
+def _bm25_sparse(tf: DataFrame, unit: tuple[str, ...] = ("doc_id",)) -> DataFrame:
+    """BM25 sparse side from ONE tf relation (*unit, token, tf[, df]):
+    each query doc's (doc_id < _RRF_NQ) distinct tokens score every other
+    ``unit`` — a document (q349/q352) or a chunk (the RAG chain) —
+    → (query_id, *unit, score). dl is Σ tf per unit (exact: tf keeps
+    every term), n and avgdl are one broadcast row, and df is tf's own
+    column when it carries one (q352's landed index), else the token's
+    posting count."""
+    dl = tf.groupBy(*unit).agg(F.sum("tf").cast("long").alias("dl"))
+    stats = dl.agg(
+        F.count("*").alias("n"),
+        (F.sum("dl") * 1.0 / F.count("*")).alias("avgdl"),
+    )
+    qtok = (
+        tf.filter(F.col("doc_id") < _RRF_NQ)
+        .select(F.col("doc_id").alias("query_id"), "token")
+        .distinct()
+    )
+    hits = qtok.join(tf, "token").filter(F.col("doc_id") != F.col("query_id"))
+    if "df" not in tf.columns:
+        df = tf.groupBy("token").agg(F.count("*").alias("df"))
+        hits = hits.join(df, "token")
+    return (
+        hits.join(dl, list(unit))
+        .crossJoin(F.broadcast(stats))
+        .groupBy("query_id", *unit)
+        .agg(_bm25_score().alias("score"))
+    )
+
+
+def _ranked(scored: DataFrame, score: str, rank: str) -> DataFrame:
+    """One modality's ranked list: row_number per query_id by (``score``
+    DESC, doc_id ASC), kept to _RRF_DEPTH → (query_id, doc_id, ``rank``).
+    The filter becomes a WindowGroupLimit, so the fusion join sees at
+    most 2·depth rows per query whatever the corpus size."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("doc_id"))
+    return (
+        scored.withColumn(rank, F.row_number().over(w))
+        .filter(F.col(rank) <= _RRF_DEPTH)
+        .select("query_id", "doc_id", rank)
+    )
+
+
+def _rrf_fuse(
+    r_sparse: DataFrame, r_dense: DataFrame, doc: str = "doc_id"
+) -> DataFrame:
+    """Reciprocal-rank fusion of the two ranked lists: a full-outer join
+    (a doc found by one modality still fuses, with the other term 0 and
+    its rank null), RRF = Σ 1/(c + rank), and the fused top-_RRF_TOP per
+    query by (rrf DESC, ``doc`` ASC) → (query_id, ``doc``, r_s, r_d,
+    rrf_score)."""
+    fused = r_sparse.join(r_dense, ["query_id", "doc_id"], "full_outer").select(
+        "query_id",
+        F.col("doc_id").alias(doc),
+        "r_s",
+        "r_d",
+        (
+            F.coalesce(1.0 / (_RRF_C + F.col("r_s")), F.lit(0.0))
+            + F.coalesce(1.0 / (_RRF_C + F.col("r_d")), F.lit(0.0))
+        ).alias("rrf"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("rrf"), F.asc(doc))
+    return (
+        fused.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= _RRF_TOP)
+        .select(
+            "query_id", doc, "r_s", "r_d", F.round("rrf", 6).alias("rrf_score")
+        )
+    )
+
+
+# The kernel's DuckDB twins. _BM25_SQL reads the i (idf), t (tf), d (dl)
+# and s (stats) aliases; the fused block reads the r_sparse / r_dense CTEs.
+_BM25_SQL = f"""round(SUM(i.idf * t.tf * ({_RRF_K1} + 1.0)
+                     / (t.tf + {_RRF_K1} * (1.0 - {_RRF_B}
+                        + {_RRF_B} * d.dl / s.avgdl))), 6)"""
+
+
+def _ranked_cte(name: str, src: str, score: str, rank: str) -> str:
+    """SQL twin of :func:`_ranked`: CTE ``name`` over ``src``."""
+    return f"""{name} AS (
+        SELECT query_id, doc_id,
+               row_number() OVER (PARTITION BY query_id
+                                  ORDER BY {score} DESC, doc_id) AS {rank}
+        FROM {src} QUALIFY {rank} <= {_RRF_DEPTH}
+    )"""
+
+
+def _rrf_fuse_sql(doc: str = "doc_id") -> str:
+    """SQL twin of :func:`_rrf_fuse`: the ``fused`` CTE over r_sparse /
+    r_dense plus the final top-k select (ends the WITH clause)."""
+    return f"""fused AS (
+        SELECT COALESCE(s.query_id, d.query_id) AS query_id,
+               COALESCE(s.doc_id, d.doc_id) AS {doc},
+               s.r_s, d.r_d,
+               COALESCE(1.0 / ({_RRF_C} + s.r_s), 0.0)
+                   + COALESCE(1.0 / ({_RRF_C} + d.r_d), 0.0) AS rrf
+        FROM r_sparse s
+        FULL OUTER JOIN r_dense d
+          ON s.query_id = d.query_id AND s.doc_id = d.doc_id
+    )
+    SELECT query_id, {doc}, r_s, r_d, round(rrf, 6) AS rrf_score
+    FROM (
+        SELECT *, row_number() OVER (PARTITION BY query_id
+                                     ORDER BY rrf DESC, {doc}) AS rn
+        FROM fused
+    ) WHERE rn <= {_RRF_TOP}"""
+
+
+# q349's direct BM25 over the exploded corpus, ranked to r_sparse — q352's
+# oracle reuses it (the index path must reproduce the direct recompute).
+_Q349_SPARSE_SQL = f"""tok AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS token
         FROM documents
     ),
@@ -4172,9 +4305,7 @@ _RRF_TOP = 10     # fused results per query
     ),
     sparse AS (
         SELECT q.query_id, t.doc_id,
-               round(SUM(i.idf * t.tf * ({_RRF_K1} + 1.0)
-                     / (t.tf + {_RRF_K1} * (1.0 - {_RRF_B}
-                        + {_RRF_B} * d.dl / s.avgdl))), 6) AS score
+               {_BM25_SQL} AS score
         FROM qtok q
         JOIN tf t ON t.token = q.token AND t.doc_id <> q.query_id
         JOIN idf i ON i.token = q.token
@@ -4182,41 +4313,22 @@ _RRF_TOP = 10     # fused results per query
         CROSS JOIN stats s
         GROUP BY q.query_id, t.doc_id
     ),
-    r_sparse AS (
-        SELECT query_id, doc_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY score DESC, doc_id) AS r_s
-        FROM sparse QUALIFY r_s <= {_RRF_DEPTH}
-    ),
+    {_ranked_cte("r_sparse", "sparse", "score", "r_s")}"""
+
+
+@query(
+    "q349_hybrid_rrf",
+    oracle=f"""
+    WITH {_Q349_SPARSE_SQL},
     dense AS (
         SELECT q.vec_id AS query_id, c.vec_id AS doc_id,
-               round({{dot}}, 6) AS sim
+               round({_dot_sql('q.embedding', 'c.embedding')}, 6) AS sim
         FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
         WHERE q.vec_id < {_RRF_NQ}
     ),
-    r_dense AS (
-        SELECT query_id, doc_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY sim DESC, doc_id) AS r_d
-        FROM dense QUALIFY r_d <= {_RRF_DEPTH}
-    ),
-    fused AS (
-        SELECT COALESCE(s.query_id, d.query_id) AS query_id,
-               COALESCE(s.doc_id, d.doc_id) AS doc_id,
-               s.r_s, d.r_d,
-               COALESCE(1.0 / ({_RRF_C} + s.r_s), 0.0)
-                   + COALESCE(1.0 / ({_RRF_C} + d.r_d), 0.0) AS rrf
-        FROM r_sparse s
-        FULL OUTER JOIN r_dense d
-          ON s.query_id = d.query_id AND s.doc_id = d.doc_id
-    )
-    SELECT query_id, doc_id, r_s, r_d, round(rrf, 6) AS rrf_score
-    FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY rrf DESC, doc_id) AS rn
-        FROM fused
-    ) WHERE rn <= {_RRF_TOP}
-    """.replace("{dot}", "list_sum(list_transform(list_zip(q.embedding, c.embedding), s -> CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE)))"),
+    {_ranked_cte("r_dense", "dense", "sim", "r_d")},
+    {_rrf_fuse_sql()}
+    """,
 )
 def q349_hybrid_rrf(spark, sf_dir) -> DataFrame:
     """HYBRID RETRIEVAL with RECIPROCAL-RANK FUSION — the production
@@ -4245,69 +4357,15 @@ def q349_hybrid_rrf(spark, sf_dir) -> DataFrame:
     sparse index (q159/q344) and ANN-screen the dense side (q72/q348);
     the fusion stage is unchanged — it only ever sees 2·depth rows per
     query."""
-    d = table(spark, sf_dir, "documents")
-    em = table(spark, sf_dir, "embeddings")
-    from pyspark.sql import Window
     from ..functions import dot
 
-    tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-    tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
-    dl = tok.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    stats = dl.agg(
-        F.count("*").alias("n_docs"),
-        (F.sum("dl") * 1.0 / F.count("*")).alias("avgdl"),
+    tf = (
+        table(spark, sf_dir, "documents")
+        .select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+        .groupBy("doc_id", "token")
+        .agg(F.count("*").alias("tf"))
     )
-    idf = (
-        tf.groupBy("token")
-        .agg(F.countDistinct("doc_id").alias("df"))
-        .crossJoin(F.broadcast(stats.select("n_docs")))
-        .select(
-            "token",
-            F.log(
-                1.0
-                + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ).alias("idf"),
-        )
-    )
-    qtok = (
-        tok.filter(F.col("doc_id") < _RRF_NQ)
-        .select(F.col("doc_id").alias("query_id"), "token")
-        .distinct()
-    )
-    sparse = (
-        qtok.join(
-            tf.withColumnRenamed("doc_id", "doc_id"),
-            on="token",
-        )
-        .filter(F.col("doc_id") != F.col("query_id"))
-        .join(idf, "token")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats.select("avgdl")))
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("idf")
-                    * F.col("tf")
-                    * (_RRF_K1 + 1.0)
-                    / (
-                        F.col("tf")
-                        + _RRF_K1
-                        * (1.0 - _RRF_B + _RRF_B * F.col("dl") / F.col("avgdl"))
-                    )
-                ),
-                6,
-            ).alias("score")
-        )
-    )
-    w_s = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    r_sparse = (
-        sparse.withColumn("r_s", F.row_number().over(w_s))
-        .filter(F.col("r_s") <= _RRF_DEPTH)
-        .select("query_id", "doc_id", "r_s")
-    )
+    em = table(spark, sf_dir, "embeddings")
     queries = em.filter(F.col("vec_id") < _RRF_NQ).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
@@ -4320,36 +4378,8 @@ def q349_hybrid_rrf(spark, sf_dir) -> DataFrame:
             F.round(dot(F.col("embedding"), F.col("q_emb")), 6).alias("sim"),
         )
     )
-    w_d = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("doc_id"))
-    r_dense = (
-        dense.withColumn("r_d", F.row_number().over(w_d))
-        .filter(F.col("r_d") <= _RRF_DEPTH)
-        .select("query_id", "doc_id", "r_d")
-    )
-    fused = (
-        r_sparse.join(r_dense, ["query_id", "doc_id"], "full_outer")
-        .select(
-            "query_id",
-            "doc_id",
-            "r_s",
-            "r_d",
-            (
-                F.coalesce(1.0 / (_RRF_C + F.col("r_s")), F.lit(0.0))
-                + F.coalesce(1.0 / (_RRF_C + F.col("r_d")), F.lit(0.0))
-            ).alias("rrf"),
-        )
-    )
-    w_f = Window.partitionBy("query_id").orderBy(F.desc("rrf"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rn", F.row_number().over(w_f))
-        .filter(F.col("rn") <= _RRF_TOP)
-        .select(
-            "query_id",
-            "doc_id",
-            "r_s",
-            "r_d",
-            F.round("rrf", 6).alias("rrf_score"),
-        )
+    return _rrf_fuse(
+        _ranked(_bm25_sparse(tf), "score", "r_s"), _ranked(dense, "sim", "r_d")
     )
 
 
@@ -4375,13 +4405,10 @@ def _rrf_sparse_index(spark, sf_dir) -> DataFrame:
     bounded shards, so no per-token partition is unsplittable at
     100 TB. Shard reassembly is LOSSLESS for scoring: the BM25 join
     keys on token alone, and the shard column only shapes layout."""
-    from ..io import materialize_once, source_stamp
+    from ..io import materialize_once, memo_location
 
     d = table(spark, sf_dir, "documents")
-    out = tmp_location(
-        f"rrfidx_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(f'{sf_dir}/documents.parquet')}",
-    )
+    out = memo_location("rrfidx", sf_dir, "documents")
 
     def write(path: str) -> None:
         tok = d.repartition("doc_id").select(
@@ -4426,13 +4453,10 @@ def _rrf_dense_index(spark, sf_dir) -> DataFrame:
     signed-safe 32-bit halves) NEXT TO the float embedding, so the
     Hamming screen reads 8 bytes/vector and column pruning fetches the
     floats only for the rerank set."""
-    from ..io import materialize_once, source_stamp
+    from ..io import materialize_once, memo_location
     from .similarity import _bq_pack_expr
 
-    out = tmp_location(
-        f"bqidx_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(f'{sf_dir}/embeddings.parquet')}",
-    )
+    out = memo_location("bqidx", sf_dir, "embeddings")
 
     def write(path: str) -> None:
         table(spark, sf_dir, "embeddings").select(
@@ -4458,62 +4482,13 @@ def hybrid_rrf_indexed(spark, sf_dir, screen_depth: int | None) -> DataFrame:
     are row-identical (pinned in tests/test_llm_variants.py); the
     registered q352 runs the production screen at 15× the fusion
     depth (q348's measured rerank rule)."""
-    from pyspark.sql import Window
-
     from ..functions import dot
 
-    idx = _rrf_sparse_index(spark, sf_dir)
-    # doc lengths recovered exactly from the index (dl = Σ tf per doc —
-    # possible only because the index keeps every term; a floored index
-    # would need the separate norms file real engines carry)
-    dl = idx.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    stats = dl.agg(
-        F.count("*").alias("n_docs"),
-        (F.sum("dl") * 1.0 / F.count("*")).alias("avgdl"),
-    )
-    d = table(spark, sf_dir, "documents")
-    qtok = (
-        d.filter(F.col("doc_id") < _RRF_NQ)
-        .select(
-            F.col("doc_id").alias("query_id"),
-            F.explode(F.split("text", " ")).alias("token"),
-        )
-        .distinct()
-    )
-    idf = F.log(
-        1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    sparse = (
-        qtok.join(idx, "token")
-        .filter(F.col("doc_id") != F.col("query_id"))
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.round(
-                F.sum(
-                    idf
-                    * F.col("tf")
-                    * (_RRF_K1 + 1.0)
-                    / (
-                        F.col("tf")
-                        + _RRF_K1
-                        * (1.0 - _RRF_B + _RRF_B * F.col("dl") / F.col("avgdl"))
-                    )
-                ),
-                6,
-            ).alias("score")
-        )
-    )
-    w_s = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    r_sparse = (
-        sparse.withColumn("r_s", F.row_number().over(w_s))
-        .filter(F.col("r_s") <= _RRF_DEPTH)
-        .select("query_id", "doc_id", "r_s")
-    )
-
+    # The index is the sparse side's only input: it keeps every term, so
+    # dl = Σ tf per doc and the query vocabulary are recovered from it
+    # exactly (a floored index would need the separate norms file real
+    # engines carry), and df is its landed column.
+    idx = _rrf_sparse_index(spark, sf_dir).select("doc_id", "token", "tf", "df")
     pk = _rrf_dense_index(spark, sf_dir)
     bq = pk.filter(F.col("vec_id") < _RRF_NQ).select(
         F.col("vec_id").alias("query_id"),
@@ -4541,91 +4516,21 @@ def hybrid_rrf_indexed(spark, sf_dir, screen_depth: int | None) -> DataFrame:
         "doc_id",
         F.round(dot(F.col("embedding"), F.col("q_emb")), 6).alias("sim"),
     )
-    w_d = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("doc_id"))
-    r_dense = (
-        dense.withColumn("r_d", F.row_number().over(w_d))
-        .filter(F.col("r_d") <= _RRF_DEPTH)
-        .select("query_id", "doc_id", "r_d")
-    )
-
-    fused = r_sparse.join(r_dense, ["query_id", "doc_id"], "full_outer").select(
-        "query_id",
-        "doc_id",
-        "r_s",
-        "r_d",
-        (
-            F.coalesce(1.0 / (_RRF_C + F.col("r_s")), F.lit(0.0))
-            + F.coalesce(1.0 / (_RRF_C + F.col("r_d")), F.lit(0.0))
-        ).alias("rrf"),
-    )
-    w_f = Window.partitionBy("query_id").orderBy(F.desc("rrf"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rn", F.row_number().over(w_f))
-        .filter(F.col("rn") <= _RRF_TOP)
-        .select(
-            "query_id",
-            "doc_id",
-            "r_s",
-            "r_d",
-            F.round("rrf", 6).alias("rrf_score"),
-        )
+    return _rrf_fuse(
+        _ranked(_bm25_sparse(idx), "score", "r_s"), _ranked(dense, "sim", "r_d")
     )
 
 
-from ..functions import dot_sql as _dot_sql  # noqa: E402
 from .similarity import _bq_pack_sql  # noqa: E402  (no import cycle: similarity does not import text)
 
 
 @query(
     "q352_hybrid_rrf_indexed",
     oracle=f"""
-    -- q349's sparse CTEs verbatim (the index path must reproduce the
-    -- direct BM25 recompute), dense side through the q348 binary
-    -- screen at depth {_RRF_SCREEN} before the exact top-{_RRF_DEPTH} rerank.
-    WITH tok AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        FROM documents
-    ),
-    tf AS (
-        SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY 1, 2
-    ),
-    dl AS (
-        SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY 1
-    ),
-    stats AS (
-        SELECT COUNT(*) AS n_docs,
-               SUM(dl) * 1.0 / COUNT(*) AS avgdl
-        FROM dl
-    ),
-    idf AS (
-        SELECT t.token,
-               ln(1.0 + (s.n_docs - COUNT(DISTINCT t.doc_id) + 0.5)
-                        / (COUNT(DISTINCT t.doc_id) + 0.5)) AS idf
-        FROM tf t CROSS JOIN stats s
-        GROUP BY t.token, s.n_docs
-    ),
-    qtok AS (
-        SELECT DISTINCT doc_id AS query_id, token FROM tok
-        WHERE doc_id < {_RRF_NQ}
-    ),
-    sparse AS (
-        SELECT q.query_id, t.doc_id,
-               round(SUM(i.idf * t.tf * ({_RRF_K1} + 1.0)
-                     / (t.tf + {_RRF_K1} * (1.0 - {_RRF_B}
-                        + {_RRF_B} * d.dl / s.avgdl))), 6) AS score
-        FROM qtok q
-        JOIN tf t ON t.token = q.token AND t.doc_id <> q.query_id
-        JOIN idf i ON i.token = q.token
-        JOIN dl d ON d.doc_id = t.doc_id
-        CROSS JOIN stats s
-        GROUP BY q.query_id, t.doc_id
-    ),
-    r_sparse AS (
-        SELECT query_id, doc_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY score DESC, doc_id) AS r_s
-        FROM sparse QUALIFY r_s <= {_RRF_DEPTH}
-    ),
+    -- q349's sparse CTEs (the index path must reproduce the direct BM25
+    -- recompute), dense side through the q348 binary screen at depth
+    -- {_RRF_SCREEN} before the exact top-{_RRF_DEPTH} rerank.
+    WITH {_Q349_SPARSE_SQL},
     packed AS (
         SELECT vec_id, embedding,
                {_bq_pack_sql(0, 32)} AS w_lo,
@@ -4652,28 +4557,8 @@ from .similarity import _bq_pack_sql  # noqa: E402  (no import cycle: similarity
             FROM cand
         ) WHERE rn_h <= {_RRF_SCREEN}
     ),
-    r_dense AS (
-        SELECT query_id, doc_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY sim DESC, doc_id) AS r_d
-        FROM screened QUALIFY r_d <= {_RRF_DEPTH}
-    ),
-    fused AS (
-        SELECT COALESCE(s.query_id, d.query_id) AS query_id,
-               COALESCE(s.doc_id, d.doc_id) AS doc_id,
-               s.r_s, d.r_d,
-               COALESCE(1.0 / ({_RRF_C} + s.r_s), 0.0)
-                   + COALESCE(1.0 / ({_RRF_C} + d.r_d), 0.0) AS rrf
-        FROM r_sparse s
-        FULL OUTER JOIN r_dense d
-          ON s.query_id = d.query_id AND s.doc_id = d.doc_id
-    )
-    SELECT query_id, doc_id, r_s, r_d, round(rrf, 6) AS rrf_score
-    FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY rrf DESC, doc_id) AS rn
-        FROM fused
-    ) WHERE rn <= {_RRF_TOP}
+    {_ranked_cte("r_dense", "screened", "sim", "r_d")},
+    {_rrf_fuse_sql()}
     """,
 )
 def q352_hybrid_rrf_indexed(spark, sf_dir) -> DataFrame:
@@ -4768,9 +4653,7 @@ from .similarity import _POOL_CHUNKS as _CAP_PC, _POOL_DEC as _CAP_DEC  # noqa: 
     ),
     cscore AS (
         SELECT q.query_id, t.doc_id, t.chunk_id,
-               round(SUM(i.idf * t.tf * ({_RRF_K1} + 1.0)
-                     / (t.tf + {_RRF_K1} * (1.0 - {_RRF_B}
-                        + {_RRF_B} * d.dl / s.avgdl))), 6) AS cs
+               {_BM25_SQL} AS cs
         FROM qtok q
         JOIN tf t ON t.token = q.token AND t.doc_id <> q.query_id
         JOIN idf i ON i.token = q.token
@@ -4782,12 +4665,7 @@ from .similarity import _POOL_CHUNKS as _CAP_PC, _POOL_DEC as _CAP_DEC  # noqa: 
         SELECT query_id, doc_id, MAX(cs) AS score
         FROM cscore GROUP BY query_id, doc_id
     ),
-    r_sparse AS (
-        SELECT query_id, doc_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY score DESC, doc_id) AS r_s
-        FROM sparse QUALIFY r_s <= {_RRF_DEPTH}
-    ),
+    {_ranked_cte("r_sparse", "sparse", "score", "r_s")},
     pool AS (
         SELECT vec_id // {_CAP_PC} AS doc, j.j AS j,
                round(CAST(SUM(CAST(CAST(embedding[j.j] AS DOUBLE)
@@ -4801,36 +4679,12 @@ from .similarity import _POOL_CHUNKS as _CAP_PC, _POOL_DEC as _CAP_DEC  # noqa: 
            WHERE doc < {_RRF_NQ}),
     dense AS (
         SELECT b.query_id, p.doc AS doc_id,
-               round({{DOT}}, 6) AS sim
+               round({_dot_sql('p.vec', 'b.qvec')}, 6) AS sim
         FROM pooled p JOIN bq b ON p.doc <> b.query_id
     ),
-    r_dense AS (
-        SELECT query_id, doc_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY sim DESC, doc_id) AS r_d
-        FROM dense QUALIFY r_d <= {_RRF_DEPTH}
-    ),
-    fused AS (
-        SELECT COALESCE(s.query_id, d.query_id) AS query_id,
-               COALESCE(s.doc_id, d.doc_id) AS neg_id,
-               s.r_s, d.r_d,
-               COALESCE(1.0 / ({_RRF_C} + s.r_s), 0.0)
-                   + COALESCE(1.0 / ({_RRF_C} + d.r_d), 0.0) AS rrf
-        FROM r_sparse s
-        FULL OUTER JOIN r_dense d
-          ON s.query_id = d.query_id AND s.doc_id = d.doc_id
-    )
-    SELECT query_id, neg_id, r_s, r_d, round(rrf, 6) AS rrf_score
-    FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY rrf DESC, neg_id) AS rn
-        FROM fused
-    ) WHERE rn <= {_RRF_TOP}
-    """.replace(
-        "{DOT}",
-        "list_sum(list_transform(list_zip(p.vec, b.qvec),"
-        " s -> CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE)))",
-    ),
+    {_ranked_cte("r_dense", "dense", "sim", "r_d")},
+    {_rrf_fuse_sql("neg_id")}
+    """,
 )
 def q360_rag_capstone(spark, sf_dir) -> DataFrame:
     """ROUND-12 CAPSTONE: the RAG chain end-to-end as ONE lazy plan
@@ -4948,66 +4802,13 @@ def _rag_chain(
     relation — it must carry _rag_pooled's exact values (per-dim
     decimal-exact mean rounded to 9dp), which per-doc incremental
     pooling preserves because a doc's pool never crosses docs."""
-    from pyspark.sql import Window as W
+    from ..functions import dot
 
-    dl = tf.groupBy("doc_id", "chunk_id").agg(
-        F.sum("tf").cast("long").alias("dl")
+    sparse = (
+        _bm25_sparse(tf, ("doc_id", "chunk_id"))
+        .groupBy("query_id", "doc_id")
+        .agg(F.max("score").alias("score"))
     )
-    stats = dl.agg(
-        F.count("*").alias("n_chunks"),
-        (F.sum("dl") * 1.0 / F.count("*")).alias("avgdl"),
-    )
-    idf = (
-        tf.groupBy("token")
-        .agg(F.count("*").alias("df"))
-        .crossJoin(F.broadcast(stats.select("n_chunks")))
-        .select(
-            "token",
-            F.log(
-                1.0
-                + (F.col("n_chunks") - F.col("df") + 0.5)
-                / (F.col("df") + 0.5)
-            ).alias("idf"),
-        )
-    )
-    qtok = (
-        tf.filter(F.col("doc_id") < _RRF_NQ)
-        .select(F.col("doc_id").alias("query_id"), "token")
-        .distinct()
-    )
-    cscore = (
-        qtok.join(tf, "token")
-        .filter(F.col("doc_id") != F.col("query_id"))
-        .join(idf, "token")
-        .join(dl, ["doc_id", "chunk_id"])
-        .crossJoin(F.broadcast(stats.select("avgdl")))
-        .groupBy("query_id", "doc_id", "chunk_id")
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("idf")
-                    * F.col("tf")
-                    * (_RRF_K1 + 1.0)
-                    / (
-                        F.col("tf")
-                        + _RRF_K1
-                        * (1.0 - _RRF_B + _RRF_B * F.col("dl") / F.col("avgdl"))
-                    )
-                ),
-                6,
-            ).alias("cs")
-        )
-    )
-    sparse = cscore.groupBy("query_id", "doc_id").agg(
-        F.max("cs").alias("score")
-    )
-    w_s = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    r_sparse = (
-        sparse.withColumn("r_s", F.row_number().over(w_s))
-        .filter(F.col("r_s") <= _RRF_DEPTH)
-        .select("query_id", "doc_id", "r_s")
-    )
-
     if pooled is None:
         em = table(spark, sf_dir, "embeddings").select(
             (F.col("vec_id") / _CAP_PC).cast("long").alias("doc"),
@@ -5017,44 +4818,17 @@ def _rag_chain(
     bq = pooled.filter(F.col("doc") < _RRF_NQ).select(
         F.col("doc").alias("query_id"), F.col("vec").alias("qvec")
     )
-    from ..functions import dot
-
-    dense = (
-        pooled.join(F.broadcast(bq), F.col("doc") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("doc").alias("doc_id"),
-            F.round(dot(F.col("vec"), F.col("qvec")), 6).alias("sim"),
-        )
-    )
-    w_d = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("doc_id"))
-    r_dense = (
-        dense.withColumn("r_d", F.row_number().over(w_d))
-        .filter(F.col("r_d") <= _RRF_DEPTH)
-        .select("query_id", "doc_id", "r_d")
-    )
-
-    fused = r_sparse.join(
-        r_dense, ["query_id", "doc_id"], "full_outer"
+    dense = pooled.join(
+        F.broadcast(bq), F.col("doc") != F.col("query_id")
     ).select(
         "query_id",
-        F.col("doc_id").alias("neg_id"),
-        "r_s",
-        "r_d",
-        (
-            F.coalesce(1.0 / (_RRF_C + F.col("r_s")), F.lit(0.0))
-            + F.coalesce(1.0 / (_RRF_C + F.col("r_d")), F.lit(0.0))
-        ).alias("rrf"),
+        F.col("doc").alias("doc_id"),
+        F.round(dot(F.col("vec"), F.col("qvec")), 6).alias("sim"),
     )
-    w_f = W.partitionBy("query_id").orderBy(F.desc("rrf"), F.asc("neg_id"))
-    return (
-        fused.withColumn("rn", F.row_number().over(w_f))
-        .filter(F.col("rn") <= _RRF_TOP)
-        .select(
-            "query_id", "neg_id", "r_s", "r_d",
-            F.round("rrf", 6).alias("rrf_score"),
-        )
+    return _rrf_fuse(
+        _ranked(sparse, "score", "r_s"), _ranked(dense, "sim", "r_d"), "neg_id"
     )
+
 
 
 def _rag_chunk_index(spark, sf_dir) -> DataFrame:
@@ -5067,17 +4841,13 @@ def _rag_chunk_index(spark, sf_dir) -> DataFrame:
     from, so a cluster deployment can bucket/cluster the landed table
     by it. Build cost amortizes across every query thereafter — the
     100 TB retrieval economics q352 documents."""
-    from ..io import materialize_once, source_stamp
+    from ..io import materialize_once, memo_location
 
     # Memo key folds in the chunker constants and a posting-layout
     # version token alongside the source stamp (ADVICE r12): a later
     # change to _CAP_S/_CAP_W or the posting columns on a machine with
     # an unchanged fixture must MISS the memo, not serve a stale index.
-    out = tmp_location(
-        f"q361idx_v1_w{_CAP_W}s{_CAP_S}"
-        f"_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(f'{sf_dir}/documents.parquet')}",
-    )
+    out = memo_location(f"q361idx_v1_w{_CAP_W}s{_CAP_S}", sf_dir, "documents")
     return materialize_once(
         spark,
         out,

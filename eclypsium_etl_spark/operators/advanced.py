@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import dsum, dsum_sql
-from ..io import materialize_once, table, tmp_location
+from ..io import materialize_once, table
 from ..registry import query
 
 
@@ -212,12 +212,9 @@ def partitioned_orders_path(sf_dir: str) -> str:
     """Scratch path of the partitionBy(o_orderstatus) orders layout:
     full-path slug (same-basename data dirs must not alias) + source
     mtime/size stamp (regenerated fixtures must not hit a stale layout)."""
-    from ..io import source_stamp
+    from ..io import memo_location
 
-    return tmp_location(
-        f"orders_partitioned_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(f'{sf_dir}/orders.parquet')}",
-    )
+    return memo_location("orders_partitioned", sf_dir, "orders")
 
 
 def partitioned_orders(spark, sf_dir) -> DataFrame:
@@ -275,10 +272,10 @@ def bucketed_orders_customer(spark, sf_dir) -> tuple[str, str]:
     once ACROSS processes (ensure_bucketed; concurrent walks previously
     raced write_bucketed's overwrite-in-place and one read a doubled
     table)."""
-    from ..io import ensure_bucketed, source_stamp
+    from ..io import ensure_bucketed, fixture_slug, source_stamp
 
     stamp = source_stamp(f"{sf_dir}/orders.parquet").replace("-", "_")
-    slug = sf_dir.strip("/").replace("/", "_").replace(".", "_")
+    slug = fixture_slug(sf_dir).replace(".", "_")
     ot, ct = f"orders_bkt_{slug}_{stamp}", f"customer_bkt_{slug}_{stamp}"
     if ot not in _BUCKETED_BUILT:
         ensure_bucketed(

@@ -22,20 +22,9 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..io import recreate_table, sink_overwrite, table, tmp_location
+from ..io import memo_location, recreate_table, sink_overwrite, table, tmp_location
 from ..registry import query
 from ..schemas import EVENT_PROPS
-
-
-def _staging_key(sf_dir: str, source: str = "documents.parquet") -> str:
-    """Staging-dir key for write-once file fixtures: full-path slug (two
-    data dirs sharing a basename must not alias) + mtime/size stamp of the
-    source table (a regenerated fixture must never be served stale staged
-    files) — the same discipline as advanced.partitioned_orders_path."""
-    from ..io import source_stamp
-
-    slug = sf_dir.strip("/").replace("/", "_")
-    return f"{slug}_{source_stamp(os.path.join(sf_dir, source))}"
 
 
 @query(
@@ -126,16 +115,18 @@ def q05_sink_jdbc(spark, sf_dir) -> DataFrame:
 
     Derby-specific care: derby.system.home is pinned to scratch BEFORE
     the first connection (else derby.log lands in the cwd), and the DB
-    directory is per-sf_dir so scale factors can't cross-contaminate.
-    Embedded Derby is single-JVM — exactly right for local[n]; a
-    multi-executor cluster would use a networked store."""
-    from ..io import read_jdbc, write_jdbc
+    is IN-MEMORY, named by the full fixture path: it lives in this JVM
+    only, so a second process on the same fixture cannot collide with
+    it (an on-disk DB is locked by the first JVM that boots it), two
+    fixture dirs sharing a basename cannot alias, and nothing is left
+    on disk. Embedded Derby is single-JVM — exactly right for local[n];
+    a multi-executor cluster would use a networked store."""
+    from ..io import fixture_slug, read_jdbc, write_jdbc
 
     spark._jvm.java.lang.System.setProperty(
         "derby.system.home", tmp_location("derby_home")
     )
-    db = tmp_location(f"q05_derby_{os.path.basename(sf_dir)}")
-    url = f"jdbc:derby:{db};create=true"
+    url = f"jdbc:derby:memory:q05_{fixture_slug(sf_dir)};create=true"
     df = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
     )
@@ -760,7 +751,7 @@ def q252_binary_file_source(spark, sf_dir) -> DataFrame:
     groups small files per task."""
     import shutil
 
-    out = tmp_location(f"q252_files_{_staging_key(sf_dir)}")
+    out = memo_location("q252_files", sf_dir, "documents")
     marker = os.path.join(out, "_STAGED")
     if not os.path.exists(marker):
         shutil.rmtree(out, ignore_errors=True)
@@ -834,7 +825,7 @@ def q253_tar_packed_assets(spark, sf_dir) -> DataFrame:
     import shutil
     import tarfile
 
-    out = tmp_location(f"q253_tars_{_staging_key(sf_dir)}")
+    out = memo_location("q253_tars", sf_dir, "documents")
     marker = os.path.join(out, "_STAGED")
     if not os.path.exists(marker):
         shutil.rmtree(out, ignore_errors=True)
@@ -999,7 +990,7 @@ def q291_zip_packed_assets(spark, sf_dir) -> DataFrame:
     import shutil
     import zipfile
 
-    out = tmp_location(f"q291_zips_{_staging_key(sf_dir)}")
+    out = memo_location("q291_zips", sf_dir, "documents")
     marker = os.path.join(out, "_STAGED")
     if not os.path.exists(marker):
         shutil.rmtree(out, ignore_errors=True)

@@ -154,12 +154,9 @@ def q90_stats_agg(spark, sf_dir) -> DataFrame:
     sf0.1: ~3.5s (two full-width scans, r10) -> ~1.1s (fanned memo) —
     the dominant cost was never the scan but the decimal stages running
     on the source parquet's 2 row-group-limited tasks."""
-    from ..io import materialize_once, source_stamp
+    from ..io import materialize_once, memo_location
 
-    proj = tmp_location(
-        f"q90proj_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(f'{sf_dir}/lineitem.parquet')}",
-    )
+    proj = memo_location("q90proj", sf_dir, "lineitem")
     # repartition to core width BEFORE landing: the source parquet is
     # 1-2 row groups, so an unfanned memo caps the decimal-sum stages at
     # 2 tasks on a 32-core box — measured 3.9s -> 1.1s at sf0.1 from

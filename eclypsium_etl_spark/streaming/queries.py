@@ -34,7 +34,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..functions import dsum, dsum_sql
-from ..io import recreate_table, table, tmp_location
+from ..io import fixture_slug, recreate_table, table, tmp_location
 from ..registry import ORACLE, query
 from ..llm.text import _QUALITY_SQL as _TEXT_QUALITY_SQL
 
@@ -73,7 +73,7 @@ def _stream_src_dir(sf_dir: str, table_name: str) -> str:
     staged = os.path.join(
         tempfile.gettempdir(),
         "eclypsium_stream_src",
-        sf_dir.strip("/").replace("/", "_") + "_" + table_name,
+        f"{fixture_slug(sf_dir)}_{table_name}",
     )
     os.makedirs(staged, exist_ok=True)
     link = os.path.join(staged, f"{table_name}.parquet")

@@ -474,3 +474,51 @@ def test_q352_unscreened_is_row_identical_to_q349(spark):
     )
     assert len(a) > 0
     assert a == b
+
+
+def test_rrf_kernel_ranks_and_fuses_tiny_frames(spark):
+    """The hybrid-retrieval kernel on hand-built frames: _ranked keeps
+    exactly _RRF_DEPTH rows per query with score ties broken by doc_id;
+    _rrf_fuse keeps a doc found by one modality (other term 0, its rank
+    null) and cuts fused ties by the doc column ASC (doc_id or neg_id)."""
+    from eclypsium_etl_spark.llm.text import (
+        _RRF_C,
+        _RRF_DEPTH,
+        _RRF_TOP,
+        _ranked,
+        _rrf_fuse,
+    )
+
+    n = _RRF_DEPTH + 5
+    scored = spark.createDataFrame(
+        [(0, d, 1.0) for d in range(n, 0, -1)]
+        + [(1, 7, 0.5), (1, 9, 0.9), (1, 8, 0.9)],
+        "query_id long, doc_id long, score double",
+    )
+    ranked = sorted(tuple(r) for r in _ranked(scored, "score", "r_s").collect())
+    assert ranked == [(0, d, d) for d in range(1, _RRF_DEPTH + 1)] + [
+        (1, 7, 3),
+        (1, 8, 1),
+        (1, 9, 2),
+    ]
+
+    # query 0: _RRF_TOP + 1 sparse-only docs tied at rank 1 → the cut
+    # drops the highest doc; query 1: one doc per modality plus one both
+    r_sparse = spark.createDataFrame(
+        [(0, d, 1) for d in range(_RRF_TOP, -1, -1)] + [(1, 4, 2), (1, 5, 1)],
+        "query_id long, doc_id long, r_s int",
+    )
+    r_dense = spark.createDataFrame(
+        [(1, 4, 1), (1, 6, 3)], "query_id long, doc_id long, r_d int"
+    )
+    rrf = lambda *ranks: round(sum(1.0 / (_RRF_C + r) for r in ranks), 6)  # noqa: E731
+    want = [(0, d, 1, None, rrf(1)) for d in range(_RRF_TOP)] + [
+        (1, 4, 2, 1, rrf(2, 1)),
+        (1, 5, 1, None, rrf(1)),
+        (1, 6, None, 3, rrf(3)),
+    ]
+    for doc in ("doc_id", "neg_id"):
+        fused = _rrf_fuse(r_sparse, r_dense, doc)
+        assert fused.columns == ["query_id", doc, "r_s", "r_d", "rrf_score"]
+        assert sorted(tuple(r) for r in fused.collect()) == want
+

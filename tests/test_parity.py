@@ -51,3 +51,24 @@ def test_driver_tooling_compiles_and_walks(spark):
         assert set(row) == {"ok", "detail", "sec"}, row
         assert row["ok"] is True, row
         assert isinstance(row["detail"], str) and isinstance(row["sec"], float)
+
+
+def test_q05_jdbc_round_trip_leaves_no_derby_dir(spark, duck_smoke, tmp_path):
+    """q05's Derby DB is in-memory, named by the full fixture path: the
+    JDBC round trip still matches its oracle, and no on-disk q05_derby_*
+    entry appears under the engine temp dir (an on-disk DB is locked by
+    the first JVM that boots it, so a second process on the same fixture
+    failed). The fixture is linked under a fresh dir so an entry keyed on
+    its basename could not already exist."""
+    from eclypsium_etl_spark.io import tmp_location
+
+    sf = tmp_path / "sf_q05"
+    sf.mkdir()
+    (sf / "customer.parquet").symlink_to(os.path.join(SF_SMOKE, "customer.parquet"))
+    pattern = tmp_location("q05_derby_*")
+    before = set(glob.glob(pattern))
+    ok, detail = compare(
+        QUERIES["q05_sink_jdbc"](spark, str(sf)), duck_smoke, ORACLE["q05_sink_jdbc"]
+    )
+    assert ok, detail
+    assert set(glob.glob(pattern)) == before

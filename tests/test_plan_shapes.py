@@ -971,18 +971,28 @@ def test_q359_no_unpartitioned_window_and_identical_to_q298(spark):
     assert len(a) > 0 and a == b
 
 
-def test_q360_one_lazy_plan_no_global_windows(spark):
-    """The RAG capstone composes chunk→pool→retrieve→fuse as ONE lazy
-    DAG: every window is query-partitioned (zero unpartitioned
-    WindowExec) and both retrieval sides broadcast the query rows."""
-    from eclypsium_etl_spark.plans import (
-        physical_plan,
-        unpartitioned_window_count,
-    )
+# Shuffle budget of each hybrid-retrieval query: its shuffle_count before
+# the BM25 → rank → RRF stages were folded into one kernel in llm/text.py.
+# The fold must never add an exchange (it planned 15 / 10 / 20 / 16).
+_RRF_SHUFFLE_BUDGET = {
+    "q349_hybrid_rrf": 15,
+    "q352_hybrid_rrf_indexed": 10,
+    "q360_rag_capstone": 22,
+    "q361_rag_capstone_indexed": 18,
+}
 
-    df = QUERIES["q360_rag_capstone"](spark, SF_CHECK)
-    assert unpartitioned_window_count(df) == 0
-    assert physical_plan(df).count("BroadcastHashJoin") >= 1
+
+@pytest.mark.parametrize("name", sorted(_RRF_SHUFFLE_BUDGET))
+def test_rrf_family_plan_budget(spark, name):
+    """Each hybrid-retrieval query stays within its shuffle budget and
+    broadcasts its query rows; the RAG capstones compose
+    chunk→pool→retrieve→fuse as ONE lazy DAG whose every window is
+    query-partitioned (zero unpartitioned WindowExec). Plans only."""
+    df = QUERIES[name](spark, SF_CHECK)
+    assert plans.shuffle_count(df) <= _RRF_SHUFFLE_BUDGET[name]
+    assert plans.has_broadcast_join(df)
+    if name.startswith(("q360", "q361")):
+        assert plans.unpartitioned_window_count(df) == 0
 
 
 def test_q361_identical_to_q360_and_no_global_windows(spark):
